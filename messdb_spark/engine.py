@@ -413,7 +413,16 @@ class Engine:
     def load_table(self, name: str, version: int | None = None) -> KeyedTable:
         """Load a table; ``version`` reads from an archived catalog
         root (time travel — immutable objects make old snapshots free).
-        A manifest-backed entry reassembles from its bucket objects."""
+        A manifest-backed entry reassembles from its bucket objects.
+
+        Zero Spark jobs (up to 32 objects; see
+        ``ObjectStore.load_objects``): a stored object's schema is
+        recorded once, at write time — in the catalog entry, and in the
+        manifest of a bucketed layout — and the read takes it from
+        there instead of inferring it from parquet footers; columns
+        follow the recorded order. Only ``verify_table``, the post-rewrite check in
+        ``compact_table`` and ``relink_table`` of a plain object
+        re-derive a schema from the files."""
         e = None
         if version is None and self._txn_entries is not None:
             e = self._txn_entries.get(name)      # read-your-writes in txn
@@ -435,7 +444,8 @@ class Engine:
         aref = load_adaptive_manifest(self.objects, e.table_hash)
         if aref is not None:
             return read_adaptive(self.spark, self.objects, aref)
-        df = self.objects.load(self.spark, e.table_hash)
+        df = self.objects.load(self.spark, e.table_hash,
+                               schema=e.schema_json)
         return KeyedTable(df, tuple(e.key_cols))
 
     def table_hash(self, name: str) -> str:

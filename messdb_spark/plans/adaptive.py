@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.core import KeyedTable
-from ..store import ObjectStore
+from ..store import ObjectStore, as_schema, empty_frame
 from .incremental import (EMPTY, _BUCKET, _bucket_expr, _write_tagged_buckets)
 
 Entry = "str | tuple[str, ...]"     # one object hash, EMPTY, or children
@@ -150,9 +150,7 @@ def _split_oversized(spark: SparkSession, store: ObjectStore,
                 and _dir_bytes(store.path(ref.entries[b])) > split_bytes]
     if not to_split:
         return ref
-    from pyspark.sql import types as T
-    schema = T.StructType.fromJson(json.loads(ref.schema_json))
-    df = (spark.read.schema(schema)
+    df = (spark.read.schema(as_schema(ref.schema_json))
           .parquet(*[store.path(ref.entries[b]) for b in to_split]))
     tag = _tag_expr(ref.key_cols, ref.n_buckets, ref.fanout, to_split)
     hashes = _write_tagged_buckets(
@@ -173,8 +171,6 @@ def read_adaptive(spark: SparkSession, store: ObjectStore,
     """Assemble the table, a bucket subset, or an exact leaf-tag subset
     (``tags`` — child-granular pruning for point lookups into split
     buckets)."""
-    from pyspark.sql import types as T
-
     if tags is not None:
         hashes = []
         for t in tags:
@@ -193,13 +189,7 @@ def read_adaptive(spark: SparkSession, store: ObjectStore,
                 hashes += [h for h in e if h != EMPTY]
             elif e != EMPTY:
                 hashes.append(e)
-    schema = T.StructType.fromJson(json.loads(ref.schema_json))
-    if not hashes:
-        return KeyedTable(spark.createDataFrame([], schema=schema),
-                          ref.key_cols)
-    store.loads += len(hashes)
-    paths = [store.path(h) for h in hashes]
-    return KeyedTable(spark.read.schema(schema).parquet(*paths),
+    return KeyedTable(store.load_objects(spark, hashes, ref.schema_json),
                       ref.key_cols)
 
 
@@ -225,11 +215,14 @@ def upsert_adaptive(spark: SparkSession, store: ObjectStore,
     if not touched:
         return ref
     base = read_adaptive(spark, store, ref, tags=touched).df
-    delta_rows = delta_t.drop(_BUCKET).select(*base.columns) \
-        if base.columns else delta
+    cols = base.columns
+    delta_rows = delta_t.drop(_BUCKET).select(*cols) if cols else delta
     keep = base.join(delta_rows.select(*keys), on=list(keys),
                      how="left_anti")
-    merged = keep.unionByName(delta_rows).withColumn(_BUCKET, tag)
+    merged = keep.unionByName(delta_rows)
+    if cols:     # keys-first anti-join output → the recorded order
+        merged = merged.select(*cols)
+    merged = merged.withColumn(_BUCKET, tag)
     merged = merged.filter(F.col(_BUCKET).isin(*touched))
     new_hashes = _write_tagged_buckets(store, merged, key_fn=str,
                                        n_parts=len(touched),
@@ -261,8 +254,6 @@ def compact_adaptive(spark: SparkSession, store: ObjectStore,
     single bucket object — one combined write for all collapsing
     buckets. Run at compaction time to bound manifest size after
     deletes/compactions shrink hot ranges."""
-    from pyspark.sql import types as T
-
     to_merge = []
     for b in ref.split_buckets:
         total = sum(_dir_bytes(store.path(h))
@@ -271,7 +262,7 @@ def compact_adaptive(spark: SparkSession, store: ObjectStore,
             to_merge.append(b)
     if not to_merge:
         return ref
-    schema = T.StructType.fromJson(json.loads(ref.schema_json))
+    schema = as_schema(ref.schema_json)
     paths = [store.path(h) for b in to_merge
              for h in ref.entries[b] if h != EMPTY]
     entries = list(ref.entries)
@@ -375,6 +366,13 @@ def adaptive_agg_view(spark: SparkSession, store: ObjectStore, memo,
         return _hl.sha256(
             f"OP_AGG_LEAF|{view_key}|{leaf_hash}".encode()).hexdigest()
 
+    def partials_of(base: DataFrame) -> DataFrame:
+        tag_col = _tag_expr(ref.key_cols, ref.n_buckets, ref.fanout,
+                            ref.split_buckets)
+        return (base.withColumn(_BUCKET, tag_col)
+                .groupBy(_BUCKET, *group_cols)
+                .agg(*[c.alias(n) for n, (_op, c) in aggs.items()]))
+
     partial_hashes: list[str] = []
     missed: list[tuple[str, str]] = []
     for tag, h in leaf_items(ref):
@@ -387,13 +385,8 @@ def adaptive_agg_view(spark: SparkSession, store: ObjectStore, memo,
             missed.append((tag, h))
 
     if missed:
-        base = read_adaptive(spark, store, ref,
-                             tags=[t for t, _h in missed]).df
-        tag_col = _tag_expr(ref.key_cols, ref.n_buckets, ref.fanout,
-                            ref.split_buckets)
-        partials = (base.withColumn(_BUCKET, tag_col)
-                        .groupBy(_BUCKET, *group_cols)
-                        .agg(*[c.alias(n) for n, (_op, c) in aggs.items()]))
+        partials = partials_of(read_adaptive(
+            spark, store, ref, tags=[t for t, _h in missed]).df)
         new_hashes = _write_tagged_buckets(store, partials, key_fn=str,
                                            n_parts=len(missed),
                                            tag_domain=[t for t, _h in missed])
@@ -403,15 +396,11 @@ def adaptive_agg_view(spark: SparkSession, store: ObjectStore, memo,
             if ph != EMPTY:
                 partial_hashes.append(ph)
 
-    if not partial_hashes:
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(ref.schema_json))
-        empty = spark.createDataFrame([], schema=schema)
-        out = empty.groupBy(*group_cols).agg(
-            *[recombine[op](c).alias(n) for n, (op, c) in aggs.items()])
-        return KeyedTable(out, tuple(group_cols))
-    parts = spark.read.parquet(*[store.path(h) for h in partial_hashes])
-    store.loads += len(partial_hashes)
+    # the partials' schema is the partial plan's, analysed over an
+    # empty input — no job; no partials at all → an empty combine
+    no_partials = partials_of(empty_frame(spark, ref.schema_json))
+    parts = store.load_objects(spark, partial_hashes,
+                               no_partials.drop(_BUCKET).schema)
     combined = parts.groupBy(*group_cols).agg(
         *[recombine[op](F.col(n)).alias(n) for n, (op, _c) in aggs.items()])
     return KeyedTable(combined, tuple(group_cols))
@@ -426,10 +415,8 @@ def lookup_adaptive(spark: SparkSession, store: ObjectStore,
     read and filtered. The flat layout's bucket-pruned point read
     (``read_bucketed(buckets=[...])``) at child granularity — on a
     split hot bucket the lookup IO shrinks by the fan-out."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType.fromJson(json.loads(ref.schema_json))
-    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+    dtypes = {f.name: f.dataType.simpleString()
+              for f in as_schema(ref.schema_json).fields}
     row = spark.createDataFrame(
         [tuple(key_values)],
         ", ".join(f"{k} {dtypes[k]}" for k in ref.key_cols))

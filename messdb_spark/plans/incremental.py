@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..hashing import bucket_content_hashes
 from ..operators.core import KeyedTable
-from ..store import ObjectStore
+from ..store import ObjectStore, empty_frame
 
 _BUCKET = "__messdb_bucket"
 EMPTY = "empty"   # manifest marker for an empty bucket
@@ -281,17 +281,14 @@ def manifest_children(store: ObjectStore, table_hash: str) -> list[str] | None:
 def read_bucketed(spark: SparkSession, store: ObjectStore,
                   ref: BucketedRef, buckets: list[int] | None = None) -> KeyedTable:
     """Assemble the table (or a bucket subset — bucket pruning for
-    point lookups) from its bucket objects."""
+    point lookups) from its bucket objects, read through the manifest's
+    recorded schema: zero Spark jobs, and ``buckets=[]`` is an empty
+    frame of that schema."""
     wanted = range(ref.n_buckets) if buckets is None else buckets
-    paths = [store.path(ref.bucket_hashes[b]) for b in wanted
-             if ref.bucket_hashes[b] != EMPTY]
-    if not paths:
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(ref.schema_json))
-        return KeyedTable(spark.createDataFrame([], schema=schema), ref.key_cols)
-    for _ in paths:
-        store.loads += 1
-    return KeyedTable(spark.read.parquet(*paths), ref.key_cols)
+    hashes = [ref.bucket_hashes[b] for b in wanted
+              if ref.bucket_hashes[b] != EMPTY]
+    return KeyedTable(store.load_objects(spark, hashes, ref.schema_json),
+                      ref.key_cols)
 
 
 def incremental_upsert(spark: SparkSession, store: ObjectStore,
@@ -325,13 +322,17 @@ def incremental_upsert(spark: SparkSession, store: ObjectStore,
     if not touched:
         return ref
     base_touched = read_bucketed(spark, store, ref, buckets=touched).df
-    delta_rows = delta_b.drop(_BUCKET).select(*base_touched.columns) \
-        if base_touched.columns else delta
+    cols = base_touched.columns
+    delta_rows = delta_b.drop(_BUCKET).select(*cols) if cols else delta
     # anti-join merge (operators.core strategy): delta wins on key collision
     keep = base_touched.join(delta_rows.select(*keys), on=list(keys), how="left_anti")
     if del_keys is not None:
         keep = keep.join(del_keys, on=list(keys), how="left_anti")
     merged = keep.unionByName(delta_rows)
+    if cols:
+        # the USING anti-join puts the keys first: write the column
+        # order the manifest records, as every untouched bucket has it
+        merged = merged.select(*cols)
     new_hashes = _write_buckets(store, merged, keys, ref.n_buckets,
                                 bucket_whitelist=set(touched))
     bh = list(ref.bucket_hashes)
@@ -373,6 +374,14 @@ def incremental_agg_view(spark: SparkSession, store: ObjectStore, memo,
         return hashlib.sha256(
             f"OP_AGG_BUCKET|{view_key}|{in_hash}".encode()).hexdigest()
 
+    def partials_of(base: DataFrame) -> DataFrame:
+        # bucket id re-derived from the key hash (rows in bucket b hash
+        # to b by construction), one (bucket, group) aggregation
+        return (base.withColumn(_BUCKET,
+                            _bucket_expr(ref.key_cols, ref.n_buckets))
+                .groupBy(_BUCKET, *group_cols)
+                .agg(*[c.alias(n) for n, (_op, c) in aggs.items()]))
+
     partial_hashes: list[str] = []
     missed: list[int] = []
     for b, in_hash in enumerate(ref.bucket_hashes):
@@ -386,16 +395,11 @@ def incremental_agg_view(spark: SparkSession, store: ObjectStore, memo,
 
     if missed:
         # ALL missed partials in one pass: one multi-path read of the
-        # missed buckets, bucket id re-derived from the key hash (rows
-        # in bucket b hash to b by construction), one (bucket, group)
-        # aggregation, one partitioned stage-write + one digest job
+        # missed buckets, one partitioned stage-write + one digest job
         # (_write_tagged_buckets) — a fixed number of jobs regardless
         # of how many buckets missed, instead of ~3 jobs per bucket.
-        tagged = (read_bucketed(spark, store, ref, buckets=missed).df
-                  .withColumn(_BUCKET,
-                              _bucket_expr(ref.key_cols, ref.n_buckets)))
-        partials = tagged.groupBy(_BUCKET, *group_cols).agg(
-            *[c.alias(n) for n, (_op, c) in aggs.items()])
+        partials = partials_of(
+            read_bucketed(spark, store, ref, buckets=missed).df)
         new_hashes = _write_tagged_buckets(store, partials,
                                            n_parts=len(missed),
                                            tag_domain=missed)
@@ -404,8 +408,11 @@ def incremental_agg_view(spark: SparkSession, store: ObjectStore, memo,
             memo.put(bucket_digest(ref.bucket_hashes[b]), h)
             partial_hashes.append(h)
 
-    parts = spark.read.parquet(*[store.path(h) for h in partial_hashes])
-    store.loads += len(partial_hashes)
+    # the partials' schema is the partial plan's, analysed over an
+    # empty input — no job, unlike inferring it from the partial objects
+    no_partials = partials_of(empty_frame(spark, ref.schema_json))
+    parts = store.load_objects(spark, partial_hashes,
+                               no_partials.drop(_BUCKET).schema)
     combined = parts.groupBy(*group_cols).agg(
         *[recombine[op](F.col(n)).alias(n) for n, (op, _c) in aggs.items()])
     return KeyedTable(combined, tuple(group_cols))
@@ -524,12 +531,13 @@ def incremental_map_view(spark: SparkSession, store: ObjectStore, memo,
         else:
             missed.append(b)
 
-    out_schema_json = ref.schema_json
+    def transformed_of(base: DataFrame) -> DataFrame:
+        return transform.fn(base.withColumn("__messdb_ord", F.lit(0))) \
+            .drop("__messdb_ord")
+
     if missed:
-        base = read_bucketed(spark, store, ref, buckets=missed).df
-        transformed = transform.fn(base.withColumn("__messdb_ord", F.lit(0)))
-        transformed = transformed.drop("__messdb_ord")
-        out_schema_json = transformed.schema.json()
+        transformed = transformed_of(
+            read_bucketed(spark, store, ref, buckets=missed).df)
         new_hashes = _write_buckets(store, transformed, ref.key_cols,
                                     ref.n_buckets, bucket_whitelist=set(missed))
         for b in missed:
@@ -539,16 +547,13 @@ def incremental_map_view(spark: SparkSession, store: ObjectStore, memo,
             # transform output is empty must be a hit on the next
             # refresh, not a recompute — cost ∝ changed key-space
             memo.put(bucket_digest(ref.bucket_hashes[b]), h)
-    else:
-        # recover output schema from any materialized bucket
-        for h in out_hashes:
-            if h != EMPTY:
-                out_schema_json = store.load(spark, h).schema.json()
-                break
 
+    # output schema: the transform plan analysed over an empty input —
+    # no job, and the same schema whether every bucket hit or some missed
+    out = transformed_of(empty_frame(spark, ref.schema_json))
     return BucketedRef(key_cols=ref.key_cols, n_buckets=ref.n_buckets,
                        bucket_hashes=tuple(out_hashes),
-                       schema_json=out_schema_json)
+                       schema_json=out.schema.json())
 
 
 def incremental_sort_view(spark: SparkSession, store: ObjectStore, memo,
@@ -602,9 +607,7 @@ def incremental_sort_view(spark: SparkSession, store: ObjectStore, memo,
         else:
             missed.append(b)
 
-    value_cols: list[str] = []
-    if missed:
-        base = read_bucketed(spark, store, ref, buckets=missed).df
+    def partials_of(base: DataFrame) -> tuple[DataFrame, list[str]]:
         old_key_struct = F.struct(*[F.col(k) for k in ref.key_cols])
         transformed = transform.fn(base.withColumn(_ORD, old_key_struct))
         if _ORD not in transformed.columns:
@@ -622,6 +625,11 @@ def incremental_sort_view(spark: SparkSession, store: ObjectStore, memo,
                     .groupBy(_BUCKET, *new_keys)
                     .agg(*fold.agg(value_cols, F.col(_ORD)),
                          ord_agg(F.col(_ORD)).alias(_ORD)))
+        return partials, value_cols
+
+    if missed:
+        partials, _ = partials_of(
+            read_bucketed(spark, store, ref, buckets=missed).df)
         new_hashes = _write_tagged_buckets(store, partials,
                                            n_parts=len(missed),
                                            tag_domain=missed)
@@ -633,11 +641,12 @@ def incremental_sort_view(spark: SparkSession, store: ObjectStore, memo,
 
     if not partial_hashes:
         raise ValueError("incremental_sort_view over an empty table")
-    parts = spark.read.parquet(*[store.path(h) for h in partial_hashes])
-    store.loads += len(partial_hashes)
-    if not value_cols:
-        value_cols = [c for c in parts.columns
-                      if c not in new_keys and c != _ORD]
+    # the partials' schema is the partial plan's, analysed over an
+    # empty input — no job, unlike inferring it from the partial objects
+    no_partials, value_cols = partials_of(
+        empty_frame(spark, ref.schema_json))
+    parts = store.load_objects(spark, partial_hashes,
+                               no_partials.drop(_BUCKET).schema)
     combined = parts.groupBy(*new_keys).agg(
         *fold.agg(value_cols, F.col(_ORD)))
     return KeyedTable(combined.select(*new_keys, *value_cols), new_keys)
@@ -694,15 +703,15 @@ def incremental_join_view(spark: SparkSession, store: ObjectStore, memo,
         else:
             missed.append(b)
 
-    out_schema_json = None
+    def joined_of(a: DataFrame, b: DataFrame) -> DataFrame:
+        return (a.withColumn(_BUCKET, _bucket_expr(ref_a.key_cols,
+                                                   ref_a.n_buckets))
+                .join(b, on=list(ref_a.key_cols), how="inner"))
+
     if missed:
-        keys = list(ref_a.key_cols)
-        a = (read_bucketed(spark, store, ref_a, buckets=missed).df
-             .withColumn(_BUCKET, _bucket_expr(ref_a.key_cols,
-                                               ref_a.n_buckets)))
-        b_df = read_bucketed(spark, store, ref_b, buckets=missed).df
-        joined = a.join(b_df, on=keys, how="inner")
-        out_schema_json = joined.drop(_BUCKET).schema.json()
+        joined = joined_of(
+            read_bucketed(spark, store, ref_a, buckets=missed).df,
+            read_bucketed(spark, store, ref_b, buckets=missed).df)
         new_hashes = _write_tagged_buckets(store, joined,
                                            n_parts=len(missed),
                                            tag_domain=missed)
@@ -715,16 +724,12 @@ def incremental_join_view(spark: SparkSession, store: ObjectStore, memo,
             # refresh_misses <= n_changed in-body assertion
             memo.put(bucket_digest(ref_a.bucket_hashes[b],
                                    ref_b.bucket_hashes[b]), h)
-    if out_schema_json is None:
-        for h in out_hashes:
-            if h != EMPTY:
-                out_schema_json = store.load(spark, h).schema.json()
-                break
-        else:
-            out_schema_json = ref_a.schema_json
+    # output schema: the join plan analysed over empty inputs (no job)
+    out = joined_of(empty_frame(spark, ref_a.schema_json),
+                    empty_frame(spark, ref_b.schema_json))
     return BucketedRef(key_cols=ref_a.key_cols, n_buckets=ref_a.n_buckets,
                        bucket_hashes=tuple(out_hashes),
-                       schema_json=out_schema_json)
+                       schema_json=out.drop(_BUCKET).schema.json())
 
 
 def diff_bucketed(spark: SparkSession, store: ObjectStore,

@@ -211,17 +211,13 @@ def load_range_manifest(store: ObjectStore,
 def read_range_bucketed(spark: SparkSession, store: ObjectStore,
                         ref: RangeBucketedRef,
                         buckets: list[int] | None = None) -> KeyedTable:
-    """Assemble the table (or a bucket subset) from its objects."""
+    """Assemble the table (or a bucket subset) from its objects, read
+    through the manifest's recorded schema (zero Spark jobs)."""
     wanted = range(ref.n_buckets) if buckets is None else buckets
-    paths = [store.path(ref.bucket_hashes[b]) for b in wanted
-             if ref.bucket_hashes[b] != EMPTY]
-    if not paths:
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(ref.schema_json))
-        return KeyedTable(spark.createDataFrame([], schema=schema),
-                          ref.key_cols)
-    store.loads += len(paths)
-    return KeyedTable(spark.read.parquet(*paths), ref.key_cols)
+    hashes = [ref.bucket_hashes[b] for b in wanted
+              if ref.bucket_hashes[b] != EMPTY]
+    return KeyedTable(store.load_objects(spark, hashes, ref.schema_json),
+                      ref.key_cols)
 
 
 def range_filter_bucketed(spark: SparkSession, store: ObjectStore,
@@ -280,11 +276,13 @@ def incremental_upsert_range(spark: SparkSession, store: ObjectStore,
         return ref
     base_touched = read_range_bucketed(spark, store, ref,
                                        buckets=touched).df
-    delta_rows = delta_b.drop(_BUCKET).select(*base_touched.columns) \
-        if base_touched.columns else delta
+    cols = base_touched.columns
+    delta_rows = delta_b.drop(_BUCKET).select(*cols) if cols else delta
     keep = base_touched.join(delta_rows.select(*keys),
                              on=list(keys), how="left_anti")
     merged = keep.unionByName(delta_rows)
+    if cols:     # keys-first anti-join output → the recorded order
+        merged = merged.select(*cols)
     with_b = (merged.withColumn(_BUCKET, bcol)
                     .filter(F.col(_BUCKET).isin(*touched))
                     .repartition(F.col(_BUCKET))

@@ -185,13 +185,8 @@ def read_box(spark: SparkSession, store: ObjectStore, ref: ZClusteredRef,
                    None if hi is None else float(hi))
                for c, (lo, hi) in box.items()}
     wanted = ref.overlapping(num_box)
-    paths = [store.path(ref.bucket_hashes[b]) for b in wanted]
-    if not paths:
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(ref.schema_json))
-        return spark.createDataFrame([], schema=schema)
-    store.loads += len(paths)
-    df = spark.read.parquet(*paths)
+    df = store.load_objects(spark, [ref.bucket_hashes[b] for b in wanted],
+                            ref.schema_json)
     for c, (lo, hi) in box.items():
         if lo is not None:
             df = df.filter(F.col(c) >= F.lit(lo))

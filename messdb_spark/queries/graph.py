@@ -585,6 +585,7 @@ def _commit_dedup_outputs(eng, src_df: DataFrame, key: str,
     from ..operators.core import KeyedTable
     from ..plans.incremental import (EMPTY, BucketedRef, _bucket_expr,
                                      _write_buckets, read_bucketed)
+    from ..store import as_schema
 
     drop = (labels.filter(F.col("doc_id") != F.col("comp"))
                   .select(F.col("doc_id").alias(key)))
@@ -611,7 +612,11 @@ def _commit_dedup_outputs(eng, src_df: DataFrame, key: str,
             else:
                 base = src_df.filter(
                     _bucket_expr((key,), n_buckets).isin(*tb))
-            out_rows = base.join(drop, key, "left_anti")
+            # the USING anti-join puts the key first: write the column
+            # order the output manifest records
+            out_rows = (base.join(drop, key, "left_anti")
+                        .select(*as_schema(old_out_ref.schema_json)
+                                .fieldNames()))
             hashes = _write_buckets(eng.objects, out_rows, (key,),
                                     n_buckets, bucket_whitelist=set(tb))
             bh = list(old_out_ref.bucket_hashes)
@@ -624,7 +629,7 @@ def _commit_dedup_outputs(eng, src_df: DataFrame, key: str,
                           schema_json=old_out_ref.schema_json)
         stats["out_buckets_rewritten"] = len(tb)
     else:
-        out_df = src_df.join(drop, key, "left_anti")
+        out_df = src_df.join(drop, key, "left_anti").select(*src_df.columns)
         hashes = _write_buckets(eng.objects, out_df, (key,), n_buckets)
         ref = BucketedRef(
             key_cols=(key,), n_buckets=n_buckets,
@@ -1052,7 +1057,8 @@ def dedup_near_incremental(eng, table: str, out: str,
     table upserts (and DELETES) only touched buckets, and the
     signature view recomputes only those buckets (counter-asserted
     in-body). An unchanged source whose outputs are in place is a TRUE
-    no-op — catalog reads only, zero data jobs, no root swap; a
+    no-op — catalog reads plus ONE Spark job (collecting the meta row;
+    every load reads through its recorded schema), no root swap; a
     tampered output restores in O(1) by RELINKING the catalog at the
     meta-pinned output hashes still in the immutable CAS (mode
     "restore"/"relink", zero data jobs), falling back to a re-derive
@@ -1111,7 +1117,8 @@ def dedup_near_incremental(eng, table: str, out: str,
     md: dict = {}
     meta_e = eng.catalog.get(meta_name)
     if meta_e is not None:
-        md = eng.objects.load(spark, meta_e.table_hash) \
+        md = eng.objects.load(spark, meta_e.table_hash,
+                              schema=meta_e.schema_json) \
             .collect()[0].asDict()
         if (md["shingle_k"] == int(shingle_k)
                 and md["text_col"] == text_col

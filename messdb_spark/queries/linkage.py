@@ -998,7 +998,9 @@ def _xs_replace_docs(spark: SparkSession, store, ref, ids_df: DataFrame,
         .distinct().collect())
     base = read_bucketed(spark, store, ref, buckets=tb).df
     keep = base.join(_xs_gate(ids_df, n_ids), "doc_id", "left_anti")
-    merged = keep.unionByName(new_rows.select(*base.columns))
+    # the USING anti-join puts doc_id first: write the recorded order
+    merged = (keep.unionByName(new_rows.select(*base.columns))
+              .select(*base.columns))
     new_hashes = _write_buckets(store, merged, ("doc_id",), ref.n_buckets,
                                 bucket_whitelist=set(tb))
     bh = list(ref.bucket_hashes)
@@ -1487,10 +1489,11 @@ def dedup_substrings_incremental(eng, table: str, out: str,
     was GC'd, or min_len/text_col changed, the state rebuilds (mode
     reported). An unchanged source whose outputs are still in place is
     a TRUE no-op (mode "noop"): the meta row pins the output hashes,
-    so the repeat run is catalog reads only — zero data jobs, no root
-    swap. A tampered output falls through to a recompute from the
+    so the repeat run is catalog reads plus ONE Spark job (collecting
+    the meta row; every load reads through its recorded schema), no
+    root swap. A tampered output falls through to a recompute from the
     cached state (detection still skipped; mode "restore" — distinct
-    from the zero-job "noop")."""
+    from the one-job "noop")."""
     from ..operators.core import KeyedTable, diff_tables
     from ..plans.incremental import load_manifest, read_bucketed
 
@@ -1510,7 +1513,8 @@ def dedup_substrings_incremental(eng, table: str, out: str,
     md: dict = {}
     meta_e = eng.catalog.get(meta_name)
     if meta_e is not None:
-        md = eng.objects.load(spark, meta_e.table_hash) \
+        md = eng.objects.load(spark, meta_e.table_hash,
+                              schema=meta_e.schema_json) \
             .collect()[0].asDict()
         if (md["min_len"] == int(min_len)
                 and md["text_col"] == text_col
@@ -1542,7 +1546,7 @@ def dedup_substrings_incremental(eng, table: str, out: str,
         elif old_hash == cur_hash:
             # source unchanged but an output hash check failed above:
             # outputs are rewritten from the cached state (detection
-            # skipped) — report a mode DISTINCT from the zero-job noop
+            # skipped) — report a mode DISTINCT from the one-job noop
             # so operators can tell a repair from a true no-op
             stats["mode"] = "restore"
             a2, s2 = a_ref, s_ref

@@ -28,6 +28,21 @@ import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def as_schema(schema) -> T.StructType:
+    """A recorded schema (``StructType`` or its ``.json()`` text, as
+    catalog entries and manifests carry it) as a ``StructType``."""
+    if isinstance(schema, str):
+        return T.StructType.fromJson(json.loads(schema))
+    return schema
+
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame of a recorded schema — analysing a plan over it
+    yields the plan's output schema without running a job."""
+    return spark.createDataFrame([], schema=as_schema(schema))
 
 
 def _atomic_write_json(path: str, obj) -> None:
@@ -290,11 +305,13 @@ class ObjectStore:
         (join-bloat or a Long.MaxValue sentinel from a driver-local
         relation — a trusted ~1e12 B MERGE INTO estimate once built a
         ~7800-partition range exchange), so the width is CLAMPED to
-        the session's shuffle parallelism instead of probed — at scale
-        ``spark.sql.shuffle.partitions`` is cluster-sized and a
-        genuinely huge save deserves that width; locally it bounds a
-        bloated estimate at 32 sorted files. No save path evaluates
-        its plan twice anymore."""
+        the session's shuffle parallelism instead of probed: a bloated
+        estimate yields at most ``spark.sql.shuffle.partitions``
+        sorted files. At scale that setting is cluster-sized and a
+        genuinely huge save deserves that width; ``session.get_spark``
+        sets it to ``SPARK_GRAFT_CPUS`` locally. (An estimate of at most
+        ``_SAVE_EST_MAX_PARTS`` files is trusted as is.) No save path
+        evaluates its plan twice anymore."""
         target = self._SAVE_TARGET_BYTES
         cap = self._SAVE_EST_MAX_PARTS
         try:
@@ -366,8 +383,11 @@ class ObjectStore:
                 if finish is not None:
                     h = finish()
                 else:
+                    # the frame just written fixes the staged schema:
+                    # reading through it skips a footer-inference job
                     spark = df.sparkSession
-                    h = content_hash_fn(spark.read.parquet(staging))
+                    h = content_hash_fn(
+                        spark.read.schema(df.schema).parquet(staging))
                 if self.exists(h):
                     self.save_skips += 1
                 else:
@@ -378,9 +398,39 @@ class ObjectStore:
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
 
-    def load(self, spark: SparkSession, table_hash: str) -> DataFrame:
+    def load(self, spark: SparkSession, table_hash: str,
+             schema=None) -> DataFrame:
+        """One stored object as a DataFrame.
+
+        Schema invariant: a stored object's schema is recorded once, at
+        write time — in its catalog entry, or in the manifest that
+        references it — and reads take it from there. Passing that
+        ``schema`` (a ``StructType`` or its JSON) makes the load a pure
+        plan: zero Spark jobs, and columns in the recorded order.
+        ``schema=None`` re-derives it from the parquet footers (one
+        listing/footer job); only ``Engine.verify_table``, the
+        post-rewrite check in ``Engine.compact_table`` and
+        ``Engine.relink_table`` of a plain object do that, because
+        their job is to learn or check what the files hold."""
         self.loads += 1
-        return spark.read.parquet(self.path(table_hash))
+        reader = spark.read if schema is None \
+            else spark.read.schema(as_schema(schema))
+        return reader.parquet(self.path(table_hash))
+
+    def load_objects(self, spark: SparkSession, table_hashes: list[str],
+                     schema) -> DataFrame:
+        """ONE parquet scan over several stored objects that share the
+        recorded ``schema`` — the bucket objects of a manifest, or the
+        partial aggregates of a maintained view. Zero Spark jobs (see
+        ``load``) while the paths stay under
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32
+        by default), past which Spark lists them in one parallel job;
+        no objects → an empty frame of ``schema``."""
+        if not table_hashes:
+            return empty_frame(spark, schema)
+        self.loads += len(table_hashes)
+        return spark.read.schema(as_schema(schema)).parquet(
+            *[self.path(h) for h in table_hashes])
 
     def load_many(self, spark: SparkSession,
                   table_hashes: list[str]) -> DataFrame:
@@ -455,7 +505,8 @@ class MemoryObjectStore(ObjectStore):
             self._tables[h] = (schema, rows)
         return h
 
-    def load(self, spark: SparkSession, table_hash: str) -> DataFrame:
+    def load(self, spark: SparkSession, table_hash: str,
+             schema=None) -> DataFrame:
         self.loads += 1
         schema, rows = self._tables[table_hash]
         return spark.createDataFrame(rows, schema=schema)
@@ -487,9 +538,10 @@ class DebugStore:
         self._log(f"[store] save {table_hash[:12]}…")
         return self._inner.save(table_hash, df)
 
-    def load(self, spark: SparkSession, table_hash: str) -> DataFrame:
+    def load(self, spark: SparkSession, table_hash: str,
+             schema=None) -> DataFrame:
         self._log(f"[store] load {table_hash[:12]}…")
-        return self._inner.load(spark, table_hash)
+        return self._inner.load(spark, table_hash, schema)
 
 
 class MemoStore:

@@ -30,6 +30,36 @@ def warehouse(tmp_path):
     return str(tmp_path / "warehouse")
 
 
+class JobCount:
+    """Spark jobs launched inside the block, counted from the status
+    tracker's job ids before and after (the listener bus is drained
+    first, so a job that just ended is already listed)."""
+
+    def __init__(self, spark) -> None:
+        self.sc = spark.sparkContext
+        self.n = None
+
+    def _ids(self) -> set[int]:
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(self.sc.statusTracker().getJobIdsForGroup(None))
+
+    def __enter__(self):
+        # jobs of a job group would not be listed
+        assert self.sc.getLocalProperty("spark.jobGroup.id") is None
+        self._before = self._ids()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.n = len(self._ids() - self._before)
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``with count_jobs() as jc: ...`` then ``jc.n`` is the number of
+    Spark jobs the block launched."""
+    return lambda: JobCount(spark)
+
+
 def pytest_sessionfinish(session, exitstatus):
     """Flush parity passes recorded by test_oracle_parity into
     tests/parity_ledger.json (see messdb_spark/parity.py)."""

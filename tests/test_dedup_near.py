@@ -230,10 +230,12 @@ def test_dedup_near_incremental_lifecycle(spark, tmp_path, capsys):
     assert cl == {1: (1, 2), 2: (1, 2), 3: (3, 2), 6: (3, 2)}
 
 
-def test_dedup_near_incremental_rebuilds_on_param_change(spark, tmp_path):
+def test_dedup_near_incremental_rebuilds_on_param_change(spark, tmp_path,
+                                                        count_jobs):
     """A different --shingle-k is a different detector: the state must
     rebuild (the memo digests carry the FuncKey, so k=8 signatures can
-    never leak into a k=12 run)."""
+    never leak into a k=12 run). The unchanged re-run after it is a
+    no-op of exactly one Spark job."""
     from messdb_spark.queries.graph import dedup_near_incremental
 
     eng = Engine(spark, str(tmp_path / "wh"))
@@ -245,8 +247,12 @@ def test_dedup_near_incremental_rebuilds_on_param_change(spark, tmp_path):
     assert st1["mode"] == "build" and st1["rows_out"] == 2
     st2 = dedup_near_incremental(eng, "d", "d_dedup", shingle_k=12)
     assert st2["mode"] == "build"            # rebuilt, not reused
-    st3 = dedup_near_incremental(eng, "d", "d_dedup", shingle_k=12)
+    with count_jobs() as jc:
+        st3 = dedup_near_incremental(eng, "d", "d_dedup", shingle_k=12)
     assert st3["mode"] == "noop"
+    # the no-op's one job collects the meta row: every table and meta
+    # load reads through its recorded schema, never a footer inference
+    assert jc.n == 1
 
 
 def test_dedup_near_incremental_commit_is_atomic(spark, tmp_path):

@@ -406,17 +406,29 @@ def test_verify_table_detects_corruption(spark, tmp_path):
     eng.save_bucketed_table("bt", ref)
     assert eng.verify_table("bt") is True
 
-    # corrupt one parquet file of the plain table (swap in a different
-    # but valid parquet: one row, same schema)
-    path = eng.objects.path(eng.table_hash("t"))
-    victim = sorted(glob.glob(os.path.join(path, "part-*")))[0]
-    evil = spark.createDataFrame([(999, "evil")], "k bigint, v string")
-    tmp_out = str(tmp_path / "evil")
-    evil.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-    src = sorted(glob.glob(os.path.join(tmp_out, "part-*")))[0]
-    os.remove(victim)
     import shutil
-    shutil.copy(src, victim)
+
+    def swap_in(table_name, frame, tag):
+        """Replace every part file of the table's object with ONE file
+        holding ``frame``'s rows."""
+        path = eng.objects.path(eng.table_hash(table_name))
+        victims = sorted(glob.glob(os.path.join(path, "part-*")))
+        tmp_out = str(tmp_path / tag)
+        frame.coalesce(1).write.mode("overwrite").parquet(tmp_out)
+        src = sorted(glob.glob(os.path.join(tmp_out, "part-*")))[0]
+        for v in victims:
+            os.remove(v)
+        shutil.copy(src, victims[0])
+
+    # same rows plus an extra column: verification must read the files'
+    # own schema — reading through the recorded one would skip the
+    # extra column and pass
+    swap_in("t", df.withColumn("extra", F.lit(1)), "extra")
+    assert eng.verify_table("t") is False
+
+    # a different but valid parquet: one row, same schema
+    swap_in("t", spark.createDataFrame([(999, "evil")], "k bigint, v string"),
+            "evil")
     assert eng.verify_table("t") is False
 
 
