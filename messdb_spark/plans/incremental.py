@@ -34,6 +34,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -171,14 +172,18 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
         # lease: GC must not sweep mid stage→commit
         (rep.write.mode("overwrite").partitionBy(_BUCKET)
             .option("compression", store.compression).parquet(staging))
+        # tag → staged directory: the partitioned write names each
+        # directory after the Hive-escaped tag (":" → "%3A"), and
+        # escaping only ever produces "%XX" sequences
+        staged = {unquote(d.split("=", 1)[1]): d
+                  for d in os.listdir(staging)
+                  if d.startswith(f"{_BUCKET}=")}
         if finish is not None:
             hashes = finish(key_fn)
             # a tag outside the declared domain would have been written
             # but never digested/registered — catch the caller bug
             # loudly (one listdir) instead of silently dropping data
-            staged = {d.split("=", 1)[1] for d in os.listdir(staging)
-                      if d.startswith(f"{_BUCKET}=")}
-            extra = staged - {str(t) for t in tag_domain}
+            extra = set(staged) - {str(t) for t in tag_domain}
             if extra:
                 raise AssertionError(
                     f"bucket write produced tags outside the declared "
@@ -190,7 +195,8 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
                 spark.read.schema(with_b.schema).parquet(staging), _BUCKET,
                 key_fn=key_fn)
         for b, h in hashes.items():
-            src = os.path.join(staging, f"{_BUCKET}={b}")
+            src = os.path.join(staging,
+                               staged.get(str(b), f"{_BUCKET}={b}"))
             dst = store.path(h)
             if store.exists(h):
                 store.save_skips += 1      # content dedup: already stored

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from . import load, pin_result, quantize, quantize_sql, query
@@ -1496,6 +1497,7 @@ def dedup_substrings_incremental(eng, table: str, out: str,
     from the one-job "noop")."""
     from ..operators.core import KeyedTable, diff_tables
     from ..plans.incremental import load_manifest, read_bucketed
+    from ..store import local_frame
 
     spark = eng.spark
     t = eng.load_table(table)
@@ -1589,12 +1591,14 @@ def dedup_substrings_incremental(eng, table: str, out: str,
         # meta pins the OUTPUT hashes too, so the next unchanged-source
         # run can no-op without recomputing the clean
         eng.save_table(meta_name, KeyedTable(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(cur_hash, int(min_len), text_col, stats["table_hash"],
                   sp_hash, stats["rows"], stats["spans"])],
-                "source_hash string, min_len bigint, text_col string, "
-                "out_hash string, spans_out_hash string, rows bigint, "
-                "spans bigint"),
+                T.StructType.fromDDL(
+                    "source_hash string, min_len bigint, text_col string, "
+                    "out_hash string, spans_out_hash string, rows bigint, "
+                    "spans bigint")),
             ("source_hash",)))
     return stats
 

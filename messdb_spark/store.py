@@ -45,6 +45,25 @@ def empty_frame(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema=as_schema(schema))
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-held frame of ``rows`` (tuples in the column order of a
+    recorded ``schema``), built from an Arrow table: it plans as a
+    local relation, so collecting it, projecting it or broadcasting it
+    into a join runs no Spark job. A list-built ``createDataFrame``
+    goes through a Python RDD instead, and every action over it is a
+    job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = as_schema(schema)
+    a_schema = to_arrow_schema(st)
+    cols = list(zip(*rows)) if rows else [()] * len(st.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, a_schema)],
+        schema=a_schema)
+    return spark.createDataFrame(table, schema=st)
+
+
 def _atomic_write_json(path: str, obj) -> None:
     d = os.path.dirname(path)
     os.makedirs(d, exist_ok=True)
@@ -327,7 +346,9 @@ class ObjectStore:
                        .stats().sizeInBytes())
         except Exception:  # noqa: BLE001 — private API: degrade to the cap
             size = None
-        if size is not None and size >= 0:
+        # Long.MaxValue is the optimizer's "unknown" sentinel (the
+        # estimate of an RDD-backed frame): size-unknown, not huge
+        if size is not None and 0 <= size < 2 ** 63 - 1:
             n = (size + target - 1) // target
             if n <= self._SAVE_EST_MAX_PARTS:
                 return max(1, n)

@@ -323,3 +323,40 @@ def test_sql_selective_registration_at_catalog_scale(spark, warehouse):
     assert eng.objects.loads - loads0 == 2         # O(referenced), not O(200)
     views1 = len([t.name for t in spark.catalog.listTables()])
     assert views1 - views0 <= 2                    # no namespace-wide views
+
+
+@pytest.mark.parametrize("observed", [True, False])
+def test_tagged_bucket_write_escapes_tags(spark, warehouse, observed):
+    """A tag Hive escapes in its directory name (":" → "%3A") must
+    pass the staged-tag guard and be renamed from the escaped
+    directory, on both the observed-digest and the read-back path."""
+    from messdb_spark.plans.incremental import _BUCKET, _write_tagged_buckets
+    from messdb_spark.store import ObjectStore
+
+    store = ObjectStore(warehouse)
+    rows = [(1, "a:b"), (2, "a:b"), (3, "plain")]
+    df = spark.createDataFrame(rows, f"k bigint, {_BUCKET} string")
+    hashes = _write_tagged_buckets(
+        store, df, key_fn=str, n_parts=2,
+        tag_domain=["a:b", "plain"] if observed else None)
+    assert set(hashes) == {"a:b", "plain"}
+    got = spark.read.parquet(store.path(hashes["a:b"])).collect()
+    assert sorted(r["k"] for r in got) == [1, 2]
+
+
+def test_save_partitions_treats_size_sentinel_as_unknown(spark, warehouse):
+    """An RDD-backed frame's size estimate is the Long.MaxValue
+    "unknown" sentinel: it must size like an unknown estimate, not as
+    a huge one clamped to a wide shuffle setting."""
+    from messdb_spark.store import ObjectStore
+
+    store = ObjectStore(warehouse)
+    df = spark.sparkContext.parallelize([(1,), (2,)]).toDF(["k"])
+    assert int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes()) == 2 ** 63 - 1
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2000")
+    try:
+        assert store._save_partitions(df) == store._SAVE_EST_MAX_PARTS
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

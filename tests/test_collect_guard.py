@@ -60,7 +60,13 @@ ALLOWED = {
     "queries/graph.py::_commit_dedup_outputs":
         "distinct touched OUTPUT bucket ids — ≤ n_buckets values "
         "(manifest constant), derived from the delta∪flip key frame; "
-        "keys themselves never reach the driver",
+        "keys themselves never reach the driver, except when that "
+        "frame is already driver-held (the driver closure's key set, "
+        "at most _DELTA_DRIVER_MAX + 1 rows per gather)",
+    "queries/graph.py::gather":
+        "delta-local driver closure: each gather collects at most "
+        "_DELTA_DRIVER_MAX + 1 rows (limit), and a gather past the "
+        "ceiling makes the re-cluster fall back to the Spark closure",
     "queries/graph.py::_delta_local_labels_body":
         "1-row edge-bound aggregate (r14 edge-level delta-locality "
         "witness; r15: body split out so delta_local_labels can "

@@ -429,7 +429,8 @@ def test_dedup_near_incremental_random_churn_model(spark, tmp_path):
     assert eng.table_hash("dd_cl") == eng.table_hash("dd_cl_full")
 
 
-def test_dedup_near_delta_local_recluster_bound(spark, tmp_path):
+def test_dedup_near_delta_local_recluster_bound(spark, tmp_path,
+                                                count_jobs):
     """r13 (VERDICT r12 next-round #1), deterministic bound: an
     adds-only refresh re-clusters ONLY the components the delta's
     buckets reach. Two planted far-apart duplicate families; adding a
@@ -456,9 +457,16 @@ def test_dedup_near_delta_local_recluster_bound(spark, tmp_path):
     rows.append((6, _A))
     eng.save_table("docs", KeyedTable(
         spark.createDataFrame(rows, schema), ("doc_id",)))
-    st1 = dedup_near_incremental(eng, "docs", "dd", clusters_table="dd_cl")
+    with count_jobs() as jc:
+        st1 = dedup_near_incremental(eng, "docs", "dd",
+                                     clusters_table="dd_cl")
     assert st1["mode"] == "refresh" and st1["cc_scope"] == "delta"
     assert st1["cc_mode"] == "warm"
+    # the neighbourhood closes on the driver: the whole refresh ran 46
+    # or 47 jobs when measured (AQE varies the upsert's bucket-id
+    # collect by one), 91 before the driver closure
+    assert st1["cc_engine"] == "driver" and st1["cc_rounds"] == 0
+    assert jc.n <= 48, jc.n
     assert st1["cc_affected_comps"] == 1          # family A's component
     assert st1["cc_input_docs"] == 3              # {1, 2} ∪ {new 6}
     assert 0 < st1["cc_input_edges"] <= st1["cc_edge_bound"]
