@@ -808,13 +808,19 @@ def _maybe_bcast(df: DataFrame, n_rows: int) -> DataFrame:
 # (seed keys, new band keys, frontier band rows, affected labels,
 # affected band rows). A neighbourhood above it — a giant near-dup
 # cluster, a bulk delta — re-clusters through the Spark closure
-# instead; 0 turns the driver closure off.
+# instead; 0 turns the driver closure off. Set from
+# tools/delta_closure_ceiling.py (4 cores, local[4]): the largest
+# gather, the band rows (4 per signed doc), at ~100k rows took the
+# driver 2.4-3.3 s against 3.8-4.4 s for the Spark closure, with a
+# ~100 MiB Python peak; the two cross between 120k and 250k rows, and
+# the driver's peak grows ~1 KiB per row.
 _DELTA_DRIVER_MAX = 100_000
 _TAKE_FIRST_PARTS = "spark.sql.limit.initialNumPartitions"
 
 
 def delta_local_labels(sig: DataFrame, new_ids: DataFrame,
                        prior: DataFrame, n_new: int,
+                       prior_counts: tuple[int, int],
                        numeric_key: bool = True,
                        rounds_out: dict | None = None,
                        stats: dict | None = None,
@@ -822,7 +828,6 @@ def delta_local_labels(sig: DataFrame, new_ids: DataFrame,
                        extra_affected: DataFrame | None = None,
                        warm: bool = True,
                        cc_fn=None,
-                       prior_counts: tuple[int, int] | None = None,
                        local_out: dict | None = None) -> DataFrame:
     """DELTA-LOCAL re-clustering (VERDICT r12 next-round #1,
     generalized to ARBITRARY churn in r13): run the min-label closure
@@ -890,9 +895,9 @@ def delta_local_labels(sig: DataFrame, new_ids: DataFrame,
     loop). ``stats["cc_engine"]`` reports which ran ("driver" or
     "spark").
 
-    ``prior_counts``: (dups, clusters) of ``prior`` when the caller
-    knows them (the verb's meta row); otherwise one aggregate job
-    counts them. ``local_out``: when the driver closure ran, receives
+    ``prior_counts``: (dups, clusters) of ``prior`` — the verb reads
+    them from its meta row; the driver closure derives the new stats
+    from them. ``local_out``: when the driver closure ran, receives
     the new label frame's ``dups`` and ``clusters`` and ``changed`` —
     the seed keys plus every affected doc whose drop status (labeled
     and not its own component's minimum) flipped; no other doc's
@@ -903,7 +908,8 @@ def delta_local_labels(sig: DataFrame, new_ids: DataFrame,
     labels_passthrough`` into ``stats`` — the counters the replay and
     churn tests assert the bound with (r14: the edge-level bound
     ``cc_input_edges ≤ cc_edge_bound`` is additionally asserted
-    in-body — see the inline derivation)."""
+    in-body on the Spark path — see the inline derivation; the driver
+    closure meets it by construction)."""
     keys = list(_BAND_KEYS)
     # pin the two frames every derivation below re-reads: the helper
     # counts each trigger full scans of the signature view (CAS
@@ -990,7 +996,10 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
     if rows is None:
         return None
     upserted = {r[0] for r in rows if r[1]}
-    seed_keys = {r[0] for r in rows}
+    # removed + edited: an edited doc is in both sets, and a doc edited
+    # to unsignable text has no bands, so only this seeds its old
+    # component
+    extra = {r[0] for r in rows if not r[1]}
     # 2. the band buckets the upserted signatures sit in
     touched: set = set()
     if upserted:
@@ -1010,7 +1019,7 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
         frontier = {r[0] for r in rows}
     # 4. prior labels of every component with a frontier or
     #    removed/edited member
-    comp_seed = frontier | (seed_keys - upserted)
+    comp_seed = frontier | extra
     affected: list = []
     if comp_seed:
         comps = (prior.join(key_set(((d,) for d in comp_seed), doc_schema),
@@ -1039,7 +1048,9 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
         buckets.setdefault((r[1], r[2], r[3]), []).append(r[0])
     # star edges exactly as edges_from_bands builds them; the
     # undirected pair set, each pair counted twice like the
-    # bidirectional edge frame
+    # bidirectional edge frame. Each bucket adds at most len - 1 pairs,
+    # so the bucket-pair bound holds by construction (the Spark path
+    # asserts it over its edge frame)
     star = set()
     edge_bound = 0
     for members in buckets.values():
@@ -1047,11 +1058,6 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
         hub = min(members)
         star.update((d, hub) for d in members if d != hub)
     n_edges = 2 * len(star)
-    if n_edges > edge_bound:
-        raise AssertionError(
-            f"delta-local closure has {n_edges} edges > bucket "
-            f"pair bound {edge_bound} — edges leaked in from "
-            f"outside the affected neighborhood")
     # union-find whose roots are component minima
     parent: dict = {}
 
@@ -1072,8 +1078,6 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
             parent[hi] = lo
     sub = {d: find(d) for d in parent}
 
-    if prior_counts is None:
-        prior_counts = _label_stats(prior)
     n_prior = sum(prior_counts)   # one representative per cluster
     dups = (prior_counts[0] - sum(d != c for d, c in prior_comp.items())
             + sum(d != c for d, c in sub.items()))
@@ -1101,7 +1105,7 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
                          label_schema).unionByName(passthrough)
     return labels, counters, dict(
         dups=dups, clusters=clusters,
-        changed=seed_keys | (was_dropped ^ is_dropped))
+        changed=upserted | extra | (was_dropped ^ is_dropped))
 
 
 def _delta_local_labels_body(sig, new_ids, prior, n_new, numeric_key,

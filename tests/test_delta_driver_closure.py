@@ -2,7 +2,8 @@
 (the default for delta-sized neighbourhoods) against the Spark closure
 (forced by a ceiling of 0), both through ``delta_local_labels`` on
 small in-memory frames — two implementations of one operator must
-agree on the labels' content hash, every counter, and the label stats.
+agree on the labels' content hash, every counter, and the label stats,
+and both must equal a full closure of the new signatures.
 Also pins that an Arrow-built local frame (the meta rows) has the same
 content hash as a list-built one and collects without a job."""
 
@@ -44,8 +45,9 @@ def _keys(spark, keys, key_type):
 
 
 def _run(spark, old, new, prior_rows, key_type):
-    """Run both engines over one delta and assert they agree; returns
-    the labels and the counters."""
+    """Run both engines over one delta and assert they agree with each
+    other and with a full closure; returns the labels and the
+    counters."""
     added = new.keys() - old.keys()
     removed = old.keys() - new.keys()
     edited = {k for k in old.keys() & new.keys() if old[k] != new[k]}
@@ -54,6 +56,7 @@ def _run(spark, old, new, prior_rows, key_type):
                         T.StructType.fromDDL(lab_schema))
     sig = _sig(spark, new, key_type).persist()
     adds_only = not (removed or edited)
+    prior_counts = G._label_stats(prior)
     results = {}
     pinned: list = [sig]
     for engine in ("driver", "spark"):
@@ -64,7 +67,8 @@ def _run(spark, old, new, prior_rows, key_type):
                 mp.setattr(G, "_DELTA_DRIVER_MAX", 0)
             labels = G.delta_local_labels(
                 sig, _keys(spark, added | edited, key_type), prior,
-                len(added | edited), numeric_key=key_type == "bigint",
+                len(added | edited), prior_counts,
+                numeric_key=key_type == "bigint",
                 stats=stats,
                 extra_affected=(None if adds_only else
                                 _keys(spark, removed | edited, key_type)),
@@ -75,11 +79,15 @@ def _run(spark, old, new, prior_rows, key_type):
                       else G._label_stats(labels))
             results[engine] = (table_content_hash(labels), stats, counts,
                                rows, local.get("changed"))
+    edges = G.edges_from_sig(sig).persist()
+    pinned.append(edges)
+    full = {(r["doc_id"], r["comp"]) for r in G.cc_labels_from_edges(
+        edges, numeric_key=key_type == "bigint").collect()}
     for f in pinned:
         f.unpersist()
     d_hash, d_stats, d_counts, d_rows, changed = results["driver"]
     s_hash, s_stats, s_counts, s_rows, _ = results["spark"]
-    assert d_rows == s_rows
+    assert d_rows == s_rows == full
     assert d_hash == s_hash
     assert d_stats == s_stats
     assert d_counts == s_counts == (
@@ -106,6 +114,16 @@ def test_driver_and_spark_closures_agree(spark):
     rows, st = _run(spark, old, old, prior, "bigint")
     assert rows == prior
     assert st["cc_input_docs"] == 0 and st["labels_passthrough"] == 7
+
+    # edit two component minima to text too short to sign: they have
+    # no bands, so only their removed/edited seeds re-cluster their old
+    # components — docs 2 and 7 still pair up under a new minimum, and
+    # doc 9 is left a singleton and leaves the labels
+    new = {**old, 1: "short", 8: "short"}
+    rows, st = _run(spark, old, new, prior, "bigint")
+    assert rows == {(2, 2), (7, 2), (3, 3), (4, 3)}
+    assert st["cc_affected_comps"] == 2 and st["cc_input_docs"] == 5
+    assert st["cc_edges"] == 2 and st["frontier_docs"] == 0
 
 
 def test_driver_and_spark_closures_agree_string_keys_churn(spark):
