@@ -415,7 +415,7 @@ class Engine:
         root (time travel — immutable objects make old snapshots free).
         A manifest-backed entry reassembles from its bucket objects.
 
-        Zero Spark jobs (up to 32 objects; see
+        Zero Spark jobs at any object count (see
         ``ObjectStore.load_objects``): a stored object's schema is
         recorded once, at write time — in the catalog entry, and in the
         manifest of a bucketed layout — and the read takes it from

@@ -150,8 +150,8 @@ def _split_oversized(spark: SparkSession, store: ObjectStore,
                 and _dir_bytes(store.path(ref.entries[b])) > split_bytes]
     if not to_split:
         return ref
-    df = (spark.read.schema(as_schema(ref.schema_json))
-          .parquet(*[store.path(ref.entries[b]) for b in to_split]))
+    df = store.load_objects(spark, [ref.entries[b] for b in to_split],
+                            ref.schema_json)
     tag = _tag_expr(ref.key_cols, ref.n_buckets, ref.fanout, to_split)
     hashes = _write_tagged_buckets(
         store, df.withColumn(_BUCKET, tag), key_fn=str,
@@ -262,12 +262,10 @@ def compact_adaptive(spark: SparkSession, store: ObjectStore,
             to_merge.append(b)
     if not to_merge:
         return ref
-    schema = as_schema(ref.schema_json)
-    paths = [store.path(h) for b in to_merge
-             for h in ref.entries[b] if h != EMPTY]
+    leaves = [h for b in to_merge for h in ref.entries[b] if h != EMPTY]
     entries = list(ref.entries)
-    if paths:
-        df = spark.read.schema(schema).parquet(*paths)
+    if leaves:
+        df = store.load_objects(spark, leaves, ref.schema_json)
         tag = _tag_expr(ref.key_cols, ref.n_buckets, ref.fanout, [])
         hashes = _write_tagged_buckets(
             store, df.withColumn(_BUCKET, tag), key_fn=str,

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..hashing import bucket_content_hashes
 from ..operators.core import KeyedTable
-from ..store import ObjectStore, empty_frame
+from ..store import ObjectStore, empty_frame, listed_on_driver
 
 _BUCKET = "__messdb_bucket"
 EMPTY = "empty"   # manifest marker for an empty bucket
@@ -190,10 +190,13 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
                     f"domain: {sorted(extra)[:8]}")
         else:
             # explicit schema: an all-empty write leaves no part files
-            # to infer from (legitimate since empty outputs memoize)
-            hashes = bucket_content_hashes(
-                spark.read.schema(with_b.schema).parquet(staging), _BUCKET,
-                key_fn=key_fn)
+            # to infer from (legitimate since empty outputs memoize);
+            # partition discovery finds the len(staged) bucket
+            # directories under the staging root, listed on the driver
+            with listed_on_driver(spark, len(staged)):
+                staged_df = spark.read.schema(with_b.schema).parquet(staging)
+            hashes = bucket_content_hashes(staged_df, _BUCKET,
+                                           key_fn=key_fn)
         for b, h in hashes.items():
             src = os.path.join(staging,
                                staged.get(str(b), f"{_BUCKET}={b}"))

@@ -720,9 +720,7 @@ def dedup_near(eng, table: str, out: str, text_col: str = "text",
             if hit != EMPTY:
                 hit_objs.append(hit)
         if complete and hit_objs:
-            eng.objects.loads += len(hit_objs)
-            sig = (eng.spark.read
-                   .parquet(*[eng.objects.path(h) for h in hit_objs])
+            sig = (eng.objects.load_objects(eng.spark, hit_objs)
                    .select("doc_id",
                            *[f"h{j}" for j in range(len(_MH_SEEDS))])
                    .persist())
@@ -959,6 +957,7 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
     five bounded actions and close it with a union-find. Returns
     (labels, counters, local_out) — or None when a gather exceeds
     ``_DELTA_DRIVER_MAX`` rows, before anything is built from it."""
+    from ..session import conf_scope
     from ..store import local_frame
 
     spark = sig.sparkSession
@@ -971,16 +970,8 @@ def _delta_driver_closure(sig, new_ids, prior, extra_affected,
         # until it has its rows; a gather usually has fewer rows than
         # the cap, so it would walk every partition in ~log4(P) jobs —
         # try them all in the first one
-        conf = spark.conf
-        prev = conf.get(_TAKE_FIRST_PARTS, None)
-        conf.set(_TAKE_FIRST_PARTS, str(1 << 30))
-        try:
+        with conf_scope(spark, {_TAKE_FIRST_PARTS: 1 << 30}):
             rows = df.limit(cap + 1).collect()
-        finally:
-            if prev is None:
-                conf.unset(_TAKE_FIRST_PARTS)
-            else:
-                conf.set(_TAKE_FIRST_PARTS, prev)
         return None if len(rows) > cap else rows
 
     def key_set(values, schema) -> DataFrame:

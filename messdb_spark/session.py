@@ -8,8 +8,10 @@ knob here is safe for both.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -83,6 +85,33 @@ class job_desc:
         except Exception:  # noqa: BLE001
             pass
         return False
+
+
+#: held while a scope's values are set: the session conf is shared with
+#: threads such as a streaming ``foreachBatch``, and two unserialized
+#: scopes could each restore the other's value instead of the original
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def conf_scope(spark: SparkSession, values: dict):
+    """Set session conf ``values`` for the block, then restore each key
+    to its previous value, or unset it if it had none. The lock is held
+    for the whole block: keep it to one read or action, and never wait
+    in it on another thread that may open a scope."""
+    conf = spark.conf
+    with _CONF_LOCK:
+        prev = {k: conf.get(k, None) for k in values}
+        try:
+            for k, v in values.items():
+                conf.set(k, str(v))
+            yield
+        finally:
+            for k, p in prev.items():
+                if p is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, p)
 
 
 def ensure_shipped(spark: SparkSession) -> None:

@@ -64,6 +64,32 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema=st)
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+#: the threshold's default: Spark lists more paths than this — or more
+#: subdirectories of one path — in a parallel job
+_SERIAL_LISTING_MAX = 32
+
+
+def listed_on_driver(spark: SparkSession, n_paths: int):
+    """Scope for a parquet read of ``n_paths`` store-written
+    directories: the read lists their files on the driver instead of
+    in a parallel Spark listing job with one task per path. Planning
+    ``spark.read.schema(s).parquet(*paths)`` over one-file objects
+    (4 cores) took 0.7-1.0 s that way against 0.1-0.2 s listed here at
+    64 paths, 5.0-6.0 s against 0.5-0.6 s at 1024, and the scan after
+    it took the same time in both. ``parquet(...)`` lists eagerly, so
+    the scope needs to cover only that call. Reads of at most 32 paths
+    list on the driver anyway and get no scope."""
+    import contextlib
+
+    from .session import conf_scope
+
+    if n_paths <= _SERIAL_LISTING_MAX:
+        return contextlib.nullcontext()
+    current = int(spark.conf.get(_LISTING_THRESHOLD))
+    return conf_scope(spark, {_LISTING_THRESHOLD: max(n_paths, current)})
+
+
 def _atomic_write_json(path: str, obj) -> None:
     d = os.path.dirname(path)
     os.makedirs(d, exist_ok=True)
@@ -429,29 +455,29 @@ class ObjectStore:
         ``schema`` (a ``StructType`` or its JSON) makes the load a pure
         plan: zero Spark jobs, and columns in the recorded order.
         ``schema=None`` re-derives it from the parquet footers (one
-        listing/footer job); only ``Engine.verify_table``, the
+        footer job); only ``Engine.verify_table``, the
         post-rewrite check in ``Engine.compact_table`` and
         ``Engine.relink_table`` of a plain object do that, because
         their job is to learn or check what the files hold."""
-        self.loads += 1
-        reader = spark.read if schema is None \
-            else spark.read.schema(as_schema(schema))
-        return reader.parquet(self.path(table_hash))
+        return self.load_objects(spark, [table_hash], schema)
 
     def load_objects(self, spark: SparkSession, table_hashes: list[str],
-                     schema) -> DataFrame:
+                     schema=None) -> DataFrame:
         """ONE parquet scan over several stored objects that share the
         recorded ``schema`` — the bucket objects of a manifest, or the
-        partial aggregates of a maintained view. Zero Spark jobs (see
-        ``load``) while the paths stay under
-        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32
-        by default), past which Spark lists them in one parallel job;
-        no objects → an empty frame of ``schema``."""
+        partial aggregates of a maintained view; no objects → an empty
+        frame of ``schema``. Each object is a directory the store wrote
+        itself, so its files are listed on the driver at any object
+        count (``listed_on_driver``): with a ``schema`` the load is a
+        pure plan, zero Spark jobs (see ``load``)."""
         if not table_hashes:
             return empty_frame(spark, schema)
         self.loads += len(table_hashes)
-        return spark.read.schema(as_schema(schema)).parquet(
-            *[self.path(h) for h in table_hashes])
+        reader = spark.read if schema is None \
+            else spark.read.schema(as_schema(schema))
+        paths = [self.path(h) for h in table_hashes]
+        with listed_on_driver(spark, len(paths)):
+            return reader.parquet(*paths)
 
     def load_many(self, spark: SparkSession,
                   table_hashes: list[str]) -> DataFrame:
@@ -467,9 +493,7 @@ class ObjectStore:
         one load per distinct object."""
         from pyspark.sql import functions as F
 
-        hs = list(dict.fromkeys(table_hashes))
-        self.loads += len(hs)
-        df = spark.read.parquet(*[self.path(h) for h in hs])
+        df = self.load_objects(spark, list(dict.fromkeys(table_hashes)))
         # the part file's PARENT directory is the object hash — robust
         # against warehouse paths that themselves contain an "objects"
         # segment (a prefix regexp would capture the wrong one)

@@ -33,7 +33,8 @@ def warehouse(tmp_path):
 class JobCount:
     """Spark jobs launched inside the block, counted from the status
     tracker's job ids before and after (the listener bus is drained
-    first, so a job that just ended is already listed)."""
+    first, so a job that just ended is already listed). ``descriptions``
+    holds each new job's description, "" for a job without one."""
 
     def __init__(self, spark) -> None:
         self.sc = spark.sparkContext
@@ -50,10 +51,20 @@ class JobCount:
         return self
 
     def __exit__(self, *exc) -> None:
-        self.n = len(self._ids() - self._before)
+        self._new = sorted(self._ids() - self._before)
+        self.n = len(self._new)
+
+    @property
+    def descriptions(self) -> list[str]:
+        jobs = self.sc._jsc.sc().statusStore()
+        out = []
+        for j in self._new:
+            d = jobs.job(j).description()
+            out.append(d.get() if d.isDefined() else "")
+        return out
 
 
-@pytest.fixture()
+@pytest.fixture(scope="session")
 def count_jobs(spark):
     """``with count_jobs() as jc: ...`` then ``jc.n`` is the number of
     Spark jobs the block launched."""

@@ -198,3 +198,105 @@ def test_stored_reads_launch_no_jobs(spark, stored, count_jobs):
     with count_jobs() as jc:
         read_bucketed(spark, eng.objects, refs["bt"], buckets=[1])
     assert jc.n == 0
+
+
+#: Spark's description of its parallel file-listing job
+_LISTING_JOB = "Listing leaf files"
+_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@pytest.fixture(scope="module")
+def wide(spark, stored, count_jobs):
+    """The test rows' shape in 64 buckets, one object each: past the 32
+    paths (or subdirectories) Spark lists in a parallel job by default.
+    The write — a full one, so its digest re-reads the 64 staged bucket
+    directories — runs under a job count."""
+    from messdb_spark.plans.incremental import write_bucketed
+
+    eng = stored[0]
+    table = KeyedTable(spark.createDataFrame(
+        [(f"v{i}", i, i % 3) for i in range(256)], _SCHEMA), ("k",))
+    with count_jobs() as jc:
+        ref = write_bucketed(eng.objects, table, n_buckets=64)
+    eng.save_bucketed_table("wide", ref)
+    assert "empty" not in ref.bucket_hashes
+    return eng, ref, jc.descriptions
+
+
+def test_wide_bucket_write_lists_staged_buckets_on_driver(wide):
+    """Digesting 64 staged bucket directories runs no listing job."""
+    _eng, _ref, descriptions = wide
+    assert descriptions
+    assert not [d for d in descriptions if d.startswith(_LISTING_JOB)]
+
+
+def test_wide_stored_reads_launch_no_jobs(spark, wide, count_jobs):
+    """Reads of 64 bucket objects are pure plans, like narrow ones."""
+    from messdb_spark.plans.incremental import read_bucketed
+
+    eng, ref, _ = wide
+    with count_jobs() as jc:
+        df = eng.load_table("wide").df
+    assert jc.n == 0
+    assert df.columns == _COLS
+    with count_jobs() as jc:
+        read_bucketed(spark, eng.objects, ref)
+    assert jc.n == 0
+    assert df.count() == 256
+
+
+@pytest.mark.parametrize("prior", [None, "8", "1000"])
+def test_wide_read_restores_listing_threshold(spark, wide, count_jobs,
+                                              prior):
+    """A wide read lists on the driver whatever the listing threshold,
+    and leaves it at its prior value, or unset — also when it fails."""
+    from pyspark.errors import AnalysisException
+
+    eng, ref, _ = wide
+    store = eng.objects
+    if prior is not None:
+        spark.conf.set(_THRESHOLD, prior)
+    try:
+        with count_jobs() as jc:
+            store.load_objects(spark, list(ref.bucket_hashes),
+                               ref.schema_json)
+        assert jc.n == 0
+        assert spark.conf.get(_THRESHOLD, None) == prior
+        with pytest.raises(AnalysisException):
+            store.load_objects(spark, [*ref.bucket_hashes, "0" * 64],
+                               ref.schema_json)
+        assert spark.conf.get(_THRESHOLD, None) == prior
+    finally:
+        spark.conf.unset(_THRESHOLD)
+
+
+def test_conf_scopes_on_many_threads_restore_the_conf(spark):
+    """Scopes opened on more threads than cores see their own value
+    inside and leave the conf unset: no scope restores another's."""
+    import sys
+    import threading
+
+    from messdb_spark.session import conf_scope
+
+    seen = []
+
+    def worker(i: int) -> None:
+        for _ in range(20):
+            with conf_scope(spark, {_THRESHOLD: 100 + i}):
+                seen.append(spark.conf.get(_THRESHOLD) == str(100 + i))
+
+    spark.conf.unset(_THRESHOLD)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 160 and all(seen)
+    assert spark.conf.get(_THRESHOLD, None) is None
