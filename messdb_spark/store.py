@@ -64,6 +64,23 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema=st)
 
 
+#: the optimizer's "unknown" size estimate (Long.MaxValue), e.g. of an
+#: RDD-backed frame
+_SIZE_UNKNOWN = 2 ** 63 - 1
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, computed
+    without running a job; ``None`` when the private plan API fails or
+    the estimate is the Long.MaxValue "unknown" sentinel."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — private API: size unknown
+        return None
+    return size if 0 <= size < _SIZE_UNKNOWN else None
+
+
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 #: the threshold's default: Spark lists more paths than this — or more
 #: subdirectories of one path — in a parallel job
@@ -367,14 +384,8 @@ class ObjectStore:
             cap = int(conf.get("spark.sql.shuffle.partitions"))
         except Exception:  # noqa: BLE001 — conf access must never fail a save
             pass
-        try:
-            size = int(df._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes())
-        except Exception:  # noqa: BLE001 — private API: degrade to the cap
-            size = None
-        # Long.MaxValue is the optimizer's "unknown" sentinel (the
-        # estimate of an RDD-backed frame): size-unknown, not huge
-        if size is not None and 0 <= size < 2 ** 63 - 1:
+        size = estimated_bytes(df)
+        if size is not None:
             n = (size + target - 1) // target
             if n <= self._SAVE_EST_MAX_PARTS:
                 return max(1, n)

@@ -34,7 +34,8 @@ class JobCount:
     """Spark jobs launched inside the block, counted from the status
     tracker's job ids before and after (the listener bus is drained
     first, so a job that just ended is already listed). ``descriptions``
-    holds each new job's description, "" for a job without one."""
+    holds each new job's description, "" for a job without one, and
+    ``stage_tasks`` the task count of each stage those jobs ran."""
 
     def __init__(self, spark) -> None:
         self.sc = spark.sparkContext
@@ -61,6 +62,20 @@ class JobCount:
         for j in self._new:
             d = jobs.job(j).description()
             out.append(d.get() if d.isDefined() else "")
+        return out
+
+    @property
+    def stage_tasks(self) -> list[tuple[str, int]]:
+        """(job description, task count) of every stage the new jobs
+        ran; a stage skipped because an earlier job ran it is left
+        out."""
+        tracker = self.sc.statusTracker()
+        out = []
+        for j, d in zip(self._new, self.descriptions):
+            for s in tracker.getJobInfo(j).stageIds:
+                info = tracker.getStageInfo(s)
+                if info is not None and info.numCompletedTasks > 0:
+                    out.append((d, info.numTasks))
         return out
 
 

@@ -4,6 +4,8 @@ and content-hash encoding unambiguity."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -360,3 +362,16 @@ def test_save_partitions_treats_size_sentinel_as_unknown(spark, warehouse):
         assert store._save_partitions(df) == store._SAVE_EST_MAX_PARTS
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_estimated_bytes_is_none_for_the_size_sentinel(spark, warehouse):
+    """``estimated_bytes`` maps the Long.MaxValue "unknown" estimate of
+    an RDD-backed frame to None, and sizes a parquet scan."""
+    from messdb_spark.store import estimated_bytes
+
+    df = spark.sparkContext.parallelize([(1,), (2,)]).toDF(["k"])
+    assert estimated_bytes(df) is None
+    path = os.path.join(warehouse, "scan")
+    spark.range(10).write.parquet(path)
+    size = estimated_bytes(spark.read.parquet(path))
+    assert isinstance(size, int) and size > 0

@@ -10,9 +10,13 @@ part of the detector contract and is covered statistically by
 from __future__ import annotations
 
 import json
+import os
 
 from messdb_spark.engine import Engine
 from messdb_spark.operators.core import KeyedTable
+
+#: the checkout these tests belong to: CLI subprocesses run from it
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 _A = ("the quick brown fox jumps over the lazy dog while the band "
@@ -111,7 +115,7 @@ def test_cli_dedup_near_subprocess(warehouse, tmp_path):
         out = subprocess.run(
             [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse,
              *args],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=_REPO)
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout
 
@@ -304,7 +308,7 @@ def test_cli_dedup_near_incremental_subprocess(warehouse, tmp_path):
         out = subprocess.run(
             [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse,
              *args],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=_REPO)
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout
 

@@ -12,6 +12,9 @@ from messdb_spark.engine import Engine
 from messdb_spark.operators.core import KeyedTable, table_to_rows
 from messdb_spark.sources.io import export_csv, export_json, import_csv
 
+#: the checkout these tests belong to: CLI subprocesses run from it
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _write(path: str, text: str) -> str:
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -158,7 +161,7 @@ def test_cli_diff_versions(spark, warehouse, tmp_path):
     def run(*args):
         out = subprocess.run(
             [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse, *args],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=_REPO)
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout
 
@@ -185,7 +188,7 @@ def test_cli_sync_verb(spark, warehouse, tmp_path):
     def run(*args):
         out = subprocess.run(
             [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse, *args],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=_REPO)
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout
 
@@ -208,7 +211,7 @@ def test_cli_verify_verb(spark, warehouse, tmp_path):
     def run(*args, expect_rc=0):
         out = subprocess.run(
             [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse, *args],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=_REPO)
         assert out.returncode == expect_rc, out.stderr[-2000:]
         return out.stdout
 
@@ -561,7 +564,7 @@ def test_cli_dedup_substrings_subprocess(spark, warehouse, tmp_path):
         out = subprocess.run(
             [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse,
              *args],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=_REPO)
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout
 
