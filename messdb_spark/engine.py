@@ -459,6 +459,15 @@ class Engine:
             raise KeyError(name)
         return e.table_hash
 
+    def table_entries(self, names) -> dict:
+        """Catalog entries of ``names`` (None for an absent name) from
+        ONE catalog root read, with this transaction's buffered writes
+        resolved first (read-your-writes, as in ``table_hash``)."""
+        buf = self._txn_entries or {}
+        out = self.catalog.get_many([n for n in names if n not in buf])
+        out.update((n, buf[n]) for n in names if n in buf)
+        return out
+
     def scan_ir(self, name: str) -> dict:
         e = self.catalog.get(name)
         return {"op": "scan", "table_hash": e.table_hash, "key_cols": e.key_cols}

@@ -704,8 +704,7 @@ def dedup_near(eng, table: str, out: str, text_col: str = "text",
     # == fresh sig is itself continuously re-proven by the gold
     # manifest-hash equality checks). Any miss → fresh signing.
     sig = edges = None
-    if (src_ref is not None and key == "doc_id" and text_col == "text"
-            and set(t.df.columns) == {"doc_id", "text"}):
+    if _mh_state_shaped(src_ref, text_col, t.df.schema):
         fkey = _mh_sig_transform_key(int(shingle_k))
         hit_objs: list[str] = []
         complete = True
@@ -759,6 +758,22 @@ def dedup_near(eng, table: str, out: str, text_col: str = "text",
         edges.unpersist()
         sig.unpersist()
     return stats
+
+
+def _mh_state_shaped(ref, text_col: str, schema) -> bool:
+    """Is a source manifest ``ref`` in the near-dup state shape: a
+    hash-bucketed manifest keyed by ``doc_id`` whose recorded
+    ``schema`` holds exactly the columns (doc_id, text), read as the
+    text column? Such a source's buckets are the maintained docs
+    snapshot's buckets at the same fan-out (same rows, names, types and
+    bucket function), so its bucket hashes key the signature memo
+    directly (``dedup_near``) and ``dedup_near_incremental`` registers
+    the manifest itself as ``<out>__mh_docs``."""
+    from ..store import as_schema
+
+    return (ref is not None and tuple(ref.key_cols) == ("doc_id",)
+            and text_col == "text"
+            and set(as_schema(schema).fieldNames()) == {"doc_id", "text"})
 
 
 def _mh_sig_transform_key(shingle_k: int) -> str:
@@ -1243,7 +1258,10 @@ def dedup_near_incremental(eng, table: str, out: str,
     applied to the verb's hot stage. State in the catalog, committed
     atomically with the outputs in one root swap:
 
-      <out>__mh_docs   — key-bucketed (doc_id, text) corpus snapshot
+      <out>__mh_docs   — key-bucketed (doc_id, text) corpus snapshot;
+                         the source's own manifest when the source is
+                         in this shape at the snapshot's fan-out (see
+                         ``_mh_state_shaped``), so it is never rewritten
       <out>__mh_sig    — per-bucket memoized signature view over it
       <out>__mh_labels — (doc_id, comp) cluster labels of the last run
       <out>__mh_meta   — (source_hash, shingle_k, text_col,
@@ -1257,10 +1275,11 @@ def dedup_near_incremental(eng, table: str, out: str,
     table upserts (and DELETES) only touched buckets, and the
     signature view recomputes only those buckets (counter-asserted
     in-body). An unchanged source whose outputs are in place is a TRUE
-    no-op — catalog reads plus ONE Spark job (collecting the meta row;
-    every load reads through its recorded schema), no root swap; a
-    tampered output restores in O(1) by RELINKING the catalog at the
-    meta-pinned output hashes still in the immutable CAS (mode
+    no-op of ZERO Spark jobs: one catalog root read, the state
+    manifests and the one-row meta record (``load_record``) are all
+    read on the driver, before the source is even loaded; no root
+    swap. A tampered output restores in O(1) by RELINKING the catalog
+    at the meta-pinned output hashes still in the immutable CAS (mode
     "restore"/"relink", zero data jobs), falling back to a re-derive
     from the maintained state — zero signing either way — when those
     objects were gc-swept. Re-CLUSTERING is DELTA-LOCAL for ANY churn
@@ -1306,37 +1325,41 @@ def dedup_near_incremental(eng, table: str, out: str,
                                      incremental_upsert, load_manifest,
                                      read_bucketed, seed_map_view_memo,
                                      write_bucketed)
-    from ..store import local_frame
+    from ..store import as_schema, local_frame
     from .linkage import _load_object_df, _xs_auto_buckets
 
     cc_fn = _cc_fn_for(cc_algorithm)
     spark = eng.spark
-    t = eng.load_table(table)
-    if len(t.key_cols) != 1:
-        raise ValueError("dedup-near needs a single-column key")
-    key = t.key_cols[0]
-    if text_col not in t.df.columns:
-        raise ValueError(f"no column {text_col!r} in {table}")
-    cur_hash = eng.table_hash(table)
-    src = t.df.select(F.col(key).alias("doc_id"),
-                      F.col(text_col).alias("text"))
     meta_name, docs_name, sig_name, labels_name = (f"{out}__mh_meta",
                                                    f"{out}__mh_docs",
                                                    f"{out}__mh_sig",
                                                    f"{out}__mh_labels")
+    # the no-op and relink decisions read only the catalog (one root
+    # read, through this transaction's buffer), the state manifests and
+    # the one-row meta record, all on the driver: an unchanged source
+    # launches no Spark job
+    ents = eng.table_entries(
+        [table, meta_name, docs_name, sig_name, labels_name, out]
+        + ([clusters_table] if clusters_table else []))
+    src_e = ents[table]
+    if src_e is None:
+        raise KeyError(f"no such table: {table}")
+    if len(src_e.key_cols) != 1:
+        raise ValueError("dedup-near needs a single-column key")
+    key = src_e.key_cols[0]
+    if text_col not in as_schema(src_e.schema_json).fieldNames():
+        raise ValueError(f"no column {text_col!r} in {table}")
+    cur_hash = src_e.table_hash
     d_ref = s_ref = old_hash = None
     md: dict = {}
-    meta_e = eng.catalog.get(meta_name)
+    meta_e = ents[meta_name]
     if meta_e is not None:
-        md = eng.objects.load(spark, meta_e.table_hash,
-                              schema=meta_e.schema_json) \
-            .collect()[0].asDict()
+        md = eng.objects.load_record(meta_e.table_hash)
         if (md["shingle_k"] == int(shingle_k)
                 and md["text_col"] == text_col
                 and md.get("cc_algorithm", "minlabel") == cc_algorithm
                 and eng.objects.exists(md["source_hash"])):
-            d_e = eng.catalog.get(docs_name)
-            s_e = eng.catalog.get(sig_name)
+            d_e, s_e = ents[docs_name], ents[sig_name]
             if d_e is not None and s_e is not None:
                 d_ref = load_manifest(eng.objects, d_e.table_hash)
                 s_ref = load_manifest(eng.objects, s_e.table_hash)
@@ -1344,9 +1367,9 @@ def dedup_near_incremental(eng, table: str, out: str,
     stats: dict = {"ok": True, "detector": "minhash-lsh", "table": out,
                    "cc_algorithm": cc_algorithm}
     if d_ref is not None and s_ref is not None and old_hash == cur_hash:
-        out_e = eng.catalog.get(out)
-        cl_e = eng.catalog.get(clusters_table) if clusters_table else None
-        lab_e = eng.catalog.get(labels_name)
+        out_e = ents[out]
+        cl_e = ents[clusters_table] if clusters_table else None
+        lab_e = ents[labels_name]
         # a noop also requires the pinned LABELS state intact (when the
         # meta pins one): a tampered labels table with intact outputs
         # would otherwise silently cost every future adds-only refresh
@@ -1418,6 +1441,15 @@ def dedup_near_incremental(eng, table: str, out: str,
                 if clusters_table:
                     stats["clusters_table"] = clusters_table
                 return stats
+    t = eng.load_table(table)
+    src = t.df.select(F.col(key).alias("doc_id"),
+                      F.col(text_col).alias("text"))
+    cur_ref = load_manifest(eng.objects, cur_hash)
+    # a source in the state shape IS the docs snapshot at its own
+    # fan-out: every bucket address an upsert or a write of it would
+    # produce is the source's own, so the manifest is registered as
+    # the snapshot and nothing is written
+    src_is_docs = _mh_state_shaped(cur_ref, text_col, src_e.schema_json)
     fkey = _mh_sig_transform_key(int(shingle_k))
     numeric = dict(t.df.dtypes)[key] in _NUMERIC_KEYS
     # a build counts the corpus — the one corpus-scale stats job,
@@ -1438,9 +1470,13 @@ def dedup_near_incremental(eng, table: str, out: str,
     with eng.transaction():
         if d_ref is None or s_ref is None:
             stats["mode"] = "build"
-            d2 = write_bucketed(eng.objects,
-                                canonicalize_input(src, ("doc_id",)),
-                                n_buckets=_xs_auto_buckets(rows_in))
+            n_docs = _xs_auto_buckets(rows_in)
+            if src_is_docs and cur_ref.n_buckets == n_docs:
+                d2 = cur_ref
+            else:
+                d2 = write_bucketed(eng.objects,
+                                    canonicalize_input(src, ("doc_id",)),
+                                    n_buckets=n_docs)
             s2 = incremental_map_view(spark, eng.objects, eng.memo,
                                       d2, fkey)
         elif old_hash == cur_hash:
@@ -1488,7 +1524,6 @@ def dedup_near_incremental(eng, table: str, out: str,
             # costs ∝ churn, not corpus. Plain-table sources keep the
             # full diff (identical output either way).
             old_ref = load_manifest(eng.objects, old_hash)
-            cur_ref = load_manifest(eng.objects, cur_hash)
             if (old_ref is not None and cur_ref is not None
                     and old_ref.key_cols == cur_ref.key_cols
                     and old_ref.n_buckets == cur_ref.n_buckets):
@@ -1541,12 +1576,15 @@ def dedup_near_incremental(eng, table: str, out: str,
                     # largestar's rewriting has no label-frame seed,
                     # so it never warm-starts (cc_mode stays honest)
                     seed = prior
-            ups = (d.filter(F.col("change") != "removed")
-                    .select("doc_id", F.col("new_text").alias("text")))
-            dels = (d.filter(F.col("change") == "removed")
-                     .select("doc_id"))
-            d2 = incremental_upsert(spark, eng.objects, d_ref, ups,
-                                    deletes=dels)
+            if src_is_docs and cur_ref.n_buckets == d_ref.n_buckets:
+                d2 = cur_ref
+            else:
+                ups = (d.filter(F.col("change") != "removed")
+                        .select("doc_id", F.col("new_text").alias("text")))
+                dels = (d.filter(F.col("change") == "removed")
+                         .select("doc_id"))
+                d2 = incremental_upsert(spark, eng.objects, d_ref, ups,
+                                        deletes=dels)
             touched = sum(1 for a, b in zip(d_ref.bucket_hashes,
                                             d2.bucket_hashes) if a != b)
             misses0 = eng.memo.misses
@@ -1611,10 +1649,8 @@ def dedup_near_incremental(eng, table: str, out: str,
             # otherwise) so gold rebuilds produce the identical
             # manifest hash; a fan-out drift vs the old out manifest
             # falls back to the full bucket write inside _commit
-            src_out_ref = load_manifest(eng.objects, cur_hash)
-            if src_out_ref is not None \
-                    and tuple(src_out_ref.key_cols) != (key,):
-                src_out_ref = None
+            src_out_ref = (cur_ref if cur_ref is not None
+                           and tuple(cur_ref.key_cols) == (key,) else None)
             n_out = (src_out_ref.n_buckets if src_out_ref is not None
                      else _xs_auto_buckets(rows_in))
             # output-manifest touched set = delta keys ∪ drop-status

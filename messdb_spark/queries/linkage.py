@@ -1490,47 +1490,50 @@ def dedup_substrings_incremental(eng, table: str, out: str,
     was GC'd, or min_len/text_col changed, the state rebuilds (mode
     reported). An unchanged source whose outputs are still in place is
     a TRUE no-op (mode "noop"): the meta row pins the output hashes,
-    so the repeat run is catalog reads plus ONE Spark job (collecting
-    the meta row; every load reads through its recorded schema), no
-    root swap. A tampered output falls through to a recompute from the
-    cached state (detection still skipped; mode "restore" — distinct
-    from the one-job "noop")."""
+    so the repeat run is driver-side reads only — one catalog root
+    read, the state manifests and the one-row meta record
+    (``load_record``) — ZERO Spark jobs and no root swap. A tampered
+    output falls through to a recompute from the cached state
+    (detection still skipped; mode "restore" — distinct from the
+    zero-job "noop")."""
     from ..operators.core import KeyedTable, diff_tables
     from ..plans.incremental import load_manifest, read_bucketed
-    from ..store import local_frame
+    from ..store import as_schema, local_frame
 
     spark = eng.spark
-    t = eng.load_table(table)
-    if len(t.key_cols) != 1:
-        raise ValueError("dedup-substrings needs a single-column key")
-    key = t.key_cols[0]
-    if text_col not in t.df.columns:
-        raise ValueError(f"no column {text_col!r} in {table}")
-    cur_hash = eng.table_hash(table)
-    src = t.df.select(key, text_col)
     meta_name, anch_name, spans_name = (f"{out}__xs_meta",
                                         f"{out}__xs_anchors",
                                         f"{out}__xs_spans")
+    # the no-op decision reads the catalog (one root read), the state
+    # manifests and the one-row meta record on the driver: no Spark job
+    ents = eng.table_entries([table, meta_name, anch_name, spans_name, out]
+                             + ([spans_table] if spans_table else []))
+    src_e = ents[table]
+    if src_e is None:
+        raise KeyError(f"no such table: {table}")
+    if len(src_e.key_cols) != 1:
+        raise ValueError("dedup-substrings needs a single-column key")
+    key = src_e.key_cols[0]
+    if text_col not in as_schema(src_e.schema_json).fieldNames():
+        raise ValueError(f"no column {text_col!r} in {table}")
+    cur_hash = src_e.table_hash
     a_ref = s_ref = old_hash = None
     md: dict = {}
-    meta_e = eng.catalog.get(meta_name)
+    meta_e = ents[meta_name]
     if meta_e is not None:
-        md = eng.objects.load(spark, meta_e.table_hash,
-                              schema=meta_e.schema_json) \
-            .collect()[0].asDict()
+        md = eng.objects.load_record(meta_e.table_hash)
         if (md["min_len"] == int(min_len)
                 and md["text_col"] == text_col
                 and eng.objects.exists(md["source_hash"])):
-            a_e = eng.catalog.get(anch_name)
-            s_e = eng.catalog.get(spans_name)
+            a_e, s_e = ents[anch_name], ents[spans_name]
             if a_e is not None and s_e is not None:
                 a_ref = load_manifest(eng.objects, a_e.table_hash)
                 s_ref = load_manifest(eng.objects, s_e.table_hash)
                 old_hash = md["source_hash"]
     stats: dict = {"ok": True, "detector": "anchor", "table": out}
     if a_ref is not None and s_ref is not None and old_hash == cur_hash:
-        out_e = eng.catalog.get(out)
-        sp_e = eng.catalog.get(spans_table) if spans_table else None
+        out_e = ents[out]
+        sp_e = ents[spans_table] if spans_table else None
         if (out_e is not None and out_e.table_hash == md.get("out_hash")
                 and (spans_table is None
                      or (sp_e is not None and sp_e.table_hash
@@ -1540,6 +1543,8 @@ def dedup_substrings_incremental(eng, table: str, out: str,
             if spans_table:
                 stats["spans_table"] = spans_table
             return stats
+    t = eng.load_table(table)
+    src = t.df.select(key, text_col)
     with eng.transaction():
         if a_ref is None or s_ref is None:
             stats["mode"] = "build"
@@ -1548,7 +1553,7 @@ def dedup_substrings_incremental(eng, table: str, out: str,
         elif old_hash == cur_hash:
             # source unchanged but an output hash check failed above:
             # outputs are rewritten from the cached state (detection
-            # skipped) — report a mode DISTINCT from the one-job noop
+            # skipped) — report a mode DISTINCT from the zero-job noop
             # so operators can tell a repair from a true no-op
             stats["mode"] = "restore"
             a2, s2 = a_ref, s_ref

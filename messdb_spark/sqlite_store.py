@@ -27,7 +27,7 @@ import json
 import os
 import sqlite3
 
-from .store import CatalogEntry
+from .store import Catalog, CatalogEntry
 
 
 def _connect(path: str) -> sqlite3.Connection:
@@ -213,11 +213,9 @@ class SqliteCatalog:
     def names(self, version: int | None = None) -> list[str]:
         return sorted(self._load_root(version).keys())
 
-    def get(self, name: str, version: int | None = None) -> CatalogEntry | None:
-        e = self._load_root(version).get(name)
-        if e is None:
-            return None
-        return CatalogEntry(e["table_hash"], e["schema_json"], e["key_cols"])
+    # entry reads over _load_root: shared with the JSON backend
+    get = Catalog.get
+    get_many = Catalog.get_many
 
     def put(self, name: str, entry: CatalogEntry) -> int:
         rec = {"table_hash": entry.table_hash,

@@ -490,6 +490,33 @@ class ObjectStore:
         with listed_on_driver(spark, len(paths)):
             return reader.parquet(*paths)
 
+    def load_record(self, table_hash: str) -> dict:
+        """The one row of a ONE-ROW stored object (a maintained verb's
+        meta record) as a dict, read on the driver with pyarrow.
+
+        A Spark read of a single row still plans a scan and runs a
+        collect job; a verb that only checks its pinned meta (a no-op
+        re-run) would pay that job on every call. The part files'
+        footers are read first, and an object whose footers count any
+        other number of rows raises ``ValueError`` before any data is
+        read, so this can never pull a table onto the driver. Values
+        are plain Python scalars (``str``/``int``/``None``), as
+        ``Row.asDict`` gives them for the string and bigint columns
+        meta records hold."""
+        import pyarrow.parquet as pq
+
+        d = self.path(table_hash)
+        files = [os.path.join(d, f) for f in sorted(os.listdir(d))
+                 if not f.startswith(("_", "."))]
+        metas = [pq.read_metadata(f) for f in files]
+        n = sum(m.num_rows for m in metas)
+        if n != 1:
+            raise ValueError(f"object {table_hash} holds {n} rows; "
+                             f"load_record reads one-row objects only")
+        self.loads += 1
+        f = next(f for f, m in zip(files, metas) if m.num_rows)
+        return pq.read_table(f).to_pylist()[0]
+
     def load_many(self, spark: SparkSession,
                   table_hashes: list[str]) -> DataFrame:
         """ONE parquet scan spanning several objects — the probe
@@ -566,6 +593,14 @@ class MemoryObjectStore(ObjectStore):
         self.loads += 1
         schema, rows = self._tables[table_hash]
         return spark.createDataFrame(rows, schema=schema)
+
+    def load_record(self, table_hash: str) -> dict:
+        _schema, rows = self._tables[table_hash]
+        if len(rows) != 1:
+            raise ValueError(f"object {table_hash} holds {len(rows)} rows; "
+                             f"load_record reads one-row objects only")
+        self.loads += 1
+        return rows[0].asDict()
 
     def load_many(self, spark: SparkSession,
                   table_hashes: list[str]) -> DataFrame:
@@ -788,10 +823,17 @@ class Catalog:
         return sorted(self._load_root(version).keys())
 
     def get(self, name: str, version: int | None = None) -> CatalogEntry | None:
-        e = self._load_root(version).get(name)
-        if e is None:
-            return None
-        return CatalogEntry(e["table_hash"], e["schema_json"], e["key_cols"])
+        return self.get_many((name,), version)[name]
+
+    def get_many(self, names, version: int | None = None
+                 ) -> dict[str, CatalogEntry | None]:
+        """Several entries from ONE root read: a consistent snapshot of
+        the named tables (None for an absent name)."""
+        root = self._load_root(version)
+        return {n: (CatalogEntry(e["table_hash"], e["schema_json"],
+                                 e["key_cols"])
+                    if (e := root.get(n)) is not None else None)
+                for n in names}
 
     def put(self, name: str, entry: CatalogEntry) -> int:
         rec = {"table_hash": entry.table_hash,

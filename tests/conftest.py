@@ -86,6 +86,33 @@ def count_jobs(spark):
     return lambda: JobCount(spark)
 
 
+@pytest.fixture()
+def cli(spark, capsys, monkeypatch):
+    """``cli(warehouse, *args, rc=0)`` runs ``messdb_spark.cli.main``
+    in this process, asserts its exit code and returns what it printed.
+    ``main`` builds a fresh ``Engine`` over the warehouse on every call,
+    as a new process would, and the session-level result caches start
+    empty at every call, so nothing but the warehouse carries state
+    from one call to the next. Starting the CLI as a subprocess costs a
+    JVM start per call; one smoke test in ``test_dedup_near.py`` still
+    does that."""
+    from messdb_spark.cli import main
+    from messdb_spark.queries import graph, similarity
+
+    caches = ((graph, "_CC_LABEL_CACHE"), (similarity, "_CODEBOOK_CACHE"),
+              (similarity, "_SAMPLE_COUNT_CACHE"))
+    for mod, name in caches:       # the session's own entries survive
+        monkeypatch.setattr(mod, name, {})
+
+    def run(warehouse: str, *args: str, rc: int = 0) -> str:
+        for mod, name in caches:
+            getattr(mod, name).clear()
+        capsys.readouterr()
+        assert main(["-w", warehouse, *args]) == rc
+        return capsys.readouterr().out
+    return run
+
+
 def pytest_sessionfinish(session, exitstatus):
     """Flush parity passes recorded by test_oracle_parity into
     tests/parity_ledger.json (see messdb_spark/parity.py)."""

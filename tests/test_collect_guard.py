@@ -56,7 +56,7 @@ ALLOWED = {
     "queries/features.py::weighted_median_price_per_priority":
         "one threshold row per priority (≤ distinct priorities)",
     "queries/graph.py::dedup_near_incremental":
-        "1-row meta record + per-change-kind delta counts (≤3 rows)",
+        "per-change-kind delta counts (≤3 rows)",
     "queries/graph.py::_commit_dedup_outputs":
         "distinct touched OUTPUT bucket ids — ≤ n_buckets values "
         "(manifest constant), derived from the delta∪flip key frame; "
@@ -73,8 +73,6 @@ ALLOWED = {
         "unpersist locally when pinned=None)",
     "queries/linkage.py::_xs_replace_docs":
         "distinct touched bucket ids — delta-bounded",
-    "queries/linkage.py::dedup_substrings_incremental":
-        "1-row meta record + change-kind counts (≤3 rows)",
     "queries/linkage.py::exact_substring_long_docs":
         "1-row meta/threshold aggregates over the span stats",
     "queries/linkage.py::exact_substring_refresh_for":

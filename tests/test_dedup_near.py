@@ -101,23 +101,16 @@ def test_dedup_near_rejects_bad_inputs(spark, tmp_path):
         pass
 
 
-def test_cli_dedup_near_subprocess(warehouse, tmp_path):
-    """dedup-near through a REAL subprocess invocation (fresh
-    interpreter, fresh Spark session — catches import/sys.path issues
-    the in-process test cannot). Runs with ``--cc-algorithm
-    largestar`` so the r12 flag is covered end-to-end too (the
-    incremental subprocess test keeps the default minlabel path)."""
+def test_cli_dedup_near_in_process(warehouse, tmp_path, cli):
+    """dedup-near end to end through ``cli.main``: DDL, JSON import,
+    the verb and a SQL read-back, each call over a fresh Engine. Runs
+    with ``--cc-algorithm largestar`` so the r12 flag is covered
+    end-to-end too (the incremental subprocess test keeps the default
+    minlabel path and the fresh-interpreter check)."""
     import json as _json
-    import subprocess
-    import sys
 
     def run(*args):
-        out = subprocess.run(
-            [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse,
-             *args],
-            capture_output=True, text=True, cwd=_REPO)
-        assert out.returncode == 0, out.stderr[-2000:]
-        return out.stdout
+        return cli(warehouse, *args)
 
     run("sql", "-c", "CREATE TABLE d (k BIGINT PRIMARY KEY, txt VARCHAR)")
     p = tmp_path / "docs.jsonl"
@@ -239,7 +232,7 @@ def test_dedup_near_incremental_rebuilds_on_param_change(spark, tmp_path,
     """A different --shingle-k is a different detector: the state must
     rebuild (the memo digests carry the FuncKey, so k=8 signatures can
     never leak into a k=12 run). The unchanged re-run after it is a
-    no-op of exactly one Spark job."""
+    no-op of zero Spark jobs."""
     from messdb_spark.queries.graph import dedup_near_incremental
 
     eng = Engine(spark, str(tmp_path / "wh"))
@@ -254,9 +247,9 @@ def test_dedup_near_incremental_rebuilds_on_param_change(spark, tmp_path,
     with count_jobs() as jc:
         st3 = dedup_near_incremental(eng, "d", "d_dedup", shingle_k=12)
     assert st3["mode"] == "noop"
-    # the no-op's one job collects the meta row: every table and meta
-    # load reads through its recorded schema, never a footer inference
-    assert jc.n == 1
+    # the no-op reads the catalog, the state manifests and the one-row
+    # meta record on the driver: no Spark job at all
+    assert jc.n == 0
 
 
 def test_dedup_near_incremental_commit_is_atomic(spark, tmp_path):
@@ -296,10 +289,13 @@ def test_dedup_near_incremental_string_keys(spark, tmp_path):
     assert got == ["w-alpha", "w-delta", "w-zulu"]
 
 
-def test_cli_dedup_near_incremental_subprocess(warehouse, tmp_path):
+def test_cli_dedup_near_incremental_subprocess(warehouse, tmp_path, cli):
     """--incremental through a REAL subprocess: build then noop across
     fresh interpreters (the state and meta live in the catalog, not
-    the session)."""
+    the session). The suite's one fresh-JVM CLI smoke test: it also
+    catches import and sys.path faults the in-process CLI tests cannot.
+    The table is set up in process; only the two verb runs pay a JVM
+    start each."""
     import json as _json
     import subprocess
     import sys
@@ -312,14 +308,15 @@ def test_cli_dedup_near_incremental_subprocess(warehouse, tmp_path):
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout
 
-    run("sql", "-c", "CREATE TABLE d (k BIGINT PRIMARY KEY, txt VARCHAR)")
+    cli(warehouse, "sql", "-c",
+        "CREATE TABLE d (k BIGINT PRIMARY KEY, txt VARCHAR)")
     p = tmp_path / "docs.jsonl"
     p.write_text("\n".join(
         _json.dumps(r) for r in [
             {"k": 1, "txt": _A}, {"k": 2, "txt": _A},
             {"k": 3, "txt": _B}, {"k": 4, "txt": _A},
         ]) + "\n")
-    run("import-json", "-t", "d", str(p))
+    cli(warehouse, "import-json", "-t", "d", str(p))
     verb = ("dedup-near", "-t", "d", "--text-col", "txt",
             "--out", "d_dedup", "--incremental")
     st1 = _json.loads(run(*verb).splitlines()[-1])
@@ -1067,3 +1064,117 @@ def test_dedup_near_incremental_over_bucketed_source(spark, tmp_path):
     # survivors readable through the transparent bucketed load path
     assert (eng.load_table("dd").df.filter(F.col("doc_id") == 100)
             .count() in (0, 1))
+
+
+def test_dedup_near_incremental_state_shaped_source_is_docs_snapshot(
+        spark, tmp_path, monkeypatch):
+    """A 16-bucket (doc_id, text) source IS the maintained docs
+    snapshot: build and refresh register the source's own manifest as
+    ``__mh_docs``, and the refresh runs no ``incremental_upsert``.
+    Differential check: a copy of the warehouse taken after the build
+    gets the same churn (edit + delete + add) as a plain-table source,
+    which takes the upsert path; both refreshes give identical docs,
+    output, cluster and label hashes, equal to a from-scratch
+    ``dedup_near`` of the final corpus."""
+    import shutil
+
+    import messdb_spark.plans.incremental as inc
+    from messdb_spark.queries.graph import (dedup_near,
+                                            dedup_near_incremental)
+
+    schema = "doc_id bigint, text string"
+    docs = {i: (_A if i % 4 == 0 else _B if i % 4 == 1 else
+                f"unique prose number {i} long enough to sign, with a "
+                f"distinct tail {i * 37}")
+            for i in range(1, 21)}
+    ups = {5: _A, 100: _B}                  # 5 edited into family A
+    dels = [4]
+    final = {k: v for k, v in {**docs, **ups}.items() if k not in dels}
+
+    def frame(rows):
+        return spark.createDataFrame(sorted(rows.items()), schema)
+
+    def run(eng):
+        return dedup_near_incremental(eng, "src", "dd",
+                                      clusters_table="dd_cl")
+
+    wb, wp = str(tmp_path / "wb"), str(tmp_path / "wp")
+    eb = Engine(spark, wb)
+    ref = inc.write_bucketed(eb.objects, KeyedTable(frame(docs),
+                                                    ("doc_id",)),
+                             n_buckets=16)
+    eb.save_bucketed_table("src", ref)
+    assert run(eb)["mode"] == "build"
+    assert eb.table_hash("dd__mh_docs") == ref.table_hash
+    shutil.copytree(wb, wp)
+
+    # the state-shaped source: its own upsert, then the verb's refresh
+    ref2 = inc.incremental_upsert(
+        spark, eb.objects, ref, frame(ups),
+        deletes=spark.createDataFrame([(k,) for k in dels],
+                                      "doc_id bigint"))
+    eb.save_bucketed_table("src", ref2)
+
+    def no_upsert(*a, **k):
+        raise AssertionError("snapshot re-derived by incremental_upsert")
+
+    with monkeypatch.context() as m:
+        m.setattr(inc, "incremental_upsert", no_upsert)
+        stb = run(eb)
+    assert stb["mode"] == "refresh" and stb["delta_docs"] == 3, stb
+    assert eb.table_hash("dd__mh_docs") == ref2.table_hash
+    meta = eb.table_hash("dd__mh_meta")
+    assert eb.objects.load_record(meta) == \
+        eb.load_table("dd__mh_meta").df.collect()[0].asDict()
+
+    # the same churn as a plain table, from the same state: upsert path
+    ep = Engine(spark, wp)
+    ep.save_table("src", KeyedTable(frame(final), ("doc_id",)))
+    calls = []
+
+    def counted(*a, **k):            # proves the patch reaches the verb
+        calls.append(1)
+        return real_upsert(*a, **k)
+
+    real_upsert = inc.incremental_upsert
+    with monkeypatch.context() as m:
+        m.setattr(inc, "incremental_upsert", counted)
+        stp = run(ep)
+    assert calls == [1]
+    assert stp["mode"] == "refresh" and stp["delta_docs"] == 3, stp
+    for name in ("dd__mh_docs", "dd", "dd_cl", "dd__mh_labels"):
+        assert ep.table_hash(name) == eb.table_hash(name), name
+
+    # gold: from scratch over the final corpus in a fresh warehouse
+    eg = Engine(spark, str(tmp_path / "wg"))
+    eg.save_table("src", KeyedTable(frame(final), ("doc_id",)))
+    full = dedup_near(eg, "src", "dd", clusters_table="dd_cl")
+    assert full["table_hash"] == stb["table_hash"] == stp["table_hash"]
+    assert eg.table_hash("dd_cl") == eb.table_hash("dd_cl")
+    assert (stb["rows_in"], stb["rows_out"], stb["clusters"]) == \
+        (full["rows_in"], full["rows_out"], full["clusters"])
+
+
+def test_load_record_reads_one_row_objects_only(spark, tmp_path):
+    """``ObjectStore.load_record`` returns a one-row object's exact
+    values (NULL included) and refuses a 2-row object."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from messdb_spark.store import local_frame
+
+    eng = Engine(spark, str(tmp_path / "wh"))
+    ddl = ("source_hash string, shingle_k bigint, text_col string, "
+           "clusters_out_hash string, rows_in bigint")
+    row = ("abc123", 8, "text", None, 2 ** 40 + 3)
+    h = eng.save_table("meta", KeyedTable(
+        local_frame(spark, [row], T.StructType.fromDDL(ddl)),
+        ("source_hash",)))
+    rec = eng.objects.load_record(h)
+    assert rec == dict(zip(("source_hash", "shingle_k", "text_col",
+                            "clusters_out_hash", "rows_in"), row))
+    h2 = eng.save_table("two", KeyedTable(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string"),
+        ("k",)))
+    with pytest.raises(ValueError, match="2 rows"):
+        eng.objects.load_record(h2)

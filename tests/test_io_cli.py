@@ -12,9 +12,6 @@ from messdb_spark.engine import Engine
 from messdb_spark.operators.core import KeyedTable, table_to_rows
 from messdb_spark.sources.io import export_csv, export_json, import_csv
 
-#: the checkout these tests belong to: CLI subprocesses run from it
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 
 def _write(path: str, text: str) -> str:
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -152,18 +149,12 @@ def test_cli_parquet_roundtrip(spark, tmp_path, capsys):
     assert got == {(1, "a"), (2, "b")}
 
 
-def test_cli_diff_versions(spark, warehouse, tmp_path):
+def test_cli_diff_versions(warehouse, tmp_path, cli):
     """`diff` verb: CDC changelog between two catalog versions."""
     import json as _json
-    import subprocess
-    import sys
 
     def run(*args):
-        out = subprocess.run(
-            [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse, *args],
-            capture_output=True, text=True, cwd=_REPO)
-        assert out.returncode == 0, out.stderr[-2000:]
-        return out.stdout
+        return cli(warehouse, *args)
 
     run("sql", "-c", "CREATE TABLE t (k BIGINT PRIMARY KEY, v VARCHAR)")
     p1 = tmp_path / "v1.csv"
@@ -180,17 +171,11 @@ def test_cli_diff_versions(spark, warehouse, tmp_path):
     assert rows == {2: ("changed", "b", "B"), 4: ("added", None, "d")}
 
 
-def test_cli_sync_verb(spark, warehouse, tmp_path):
+def test_cli_sync_verb(warehouse, tmp_path, cli):
     import json as _json
-    import subprocess
-    import sys
 
     def run(*args):
-        out = subprocess.run(
-            [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse, *args],
-            capture_output=True, text=True, cwd=_REPO)
-        assert out.returncode == 0, out.stderr[-2000:]
-        return out.stdout
+        return cli(warehouse, *args)
 
     run("sql", "-c", "CREATE TABLE t (k BIGINT PRIMARY KEY, v VARCHAR)")
     p = tmp_path / "in.csv"
@@ -203,17 +188,11 @@ def test_cli_sync_verb(spark, warehouse, tmp_path):
     assert second["copied"] == 0 and second["skipped"] == 1
 
 
-def test_cli_verify_verb(spark, warehouse, tmp_path):
+def test_cli_verify_verb(warehouse, tmp_path, cli):
     import json as _json
-    import subprocess
-    import sys
 
     def run(*args, expect_rc=0):
-        out = subprocess.run(
-            [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse, *args],
-            capture_output=True, text=True, cwd=_REPO)
-        assert out.returncode == expect_rc, out.stderr[-2000:]
-        return out.stdout
+        return cli(warehouse, *args, rc=expect_rc)
 
     run("sql", "-c", "CREATE TABLE t (k BIGINT PRIMARY KEY, v VARCHAR)")
     p = tmp_path / "in.csv"
@@ -552,21 +531,14 @@ def test_cli_dedup_substrings_verb(spark, tmp_path, capsys):
                  "--text-col", "nope", "--out", "x"]) == 1
 
 
-def test_cli_dedup_substrings_subprocess(spark, warehouse, tmp_path):
-    """dedup-substrings through a REAL subprocess invocation (fresh
-    interpreter, fresh Spark session — catches import/sys.path issues
-    the in-process test cannot)."""
+def test_cli_dedup_substrings_in_process(warehouse, tmp_path, cli):
+    """dedup-substrings end to end through ``cli.main``: DDL, JSON
+    import, the verb and a SQL read-back, each call over a fresh
+    Engine."""
     import json as _json
-    import subprocess
-    import sys
 
     def run(*args):
-        out = subprocess.run(
-            [sys.executable, "-m", "messdb_spark.cli", "-w", warehouse,
-             *args],
-            capture_output=True, text=True, cwd=_REPO)
-        assert out.returncode == 0, out.stderr[-2000:]
-        return out.stdout
+        return cli(warehouse, *args)
 
     run("sql", "-c", "CREATE TABLE d (k BIGINT PRIMARY KEY, txt VARCHAR)")
     shared = "S" * 15 + "HARED-RUN-THIRTYPLUS-CHARS" + "!" * 5

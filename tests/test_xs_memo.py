@@ -284,9 +284,11 @@ def test_cli_dedup_substrings_incremental_lifecycle(spark, tmp_path,
     assert spans and all(d in (3, 4) for d, _, _ in spans)
 
 
-def test_incremental_state_rebuilds_on_min_len_change(spark, tmp_path):
+def test_incremental_state_rebuilds_on_min_len_change(spark, tmp_path,
+                                                     count_jobs):
     """A different --min-len is a different operator: the state must
-    rebuild, not silently reuse mismatched manifests."""
+    rebuild, not silently reuse mismatched manifests. The unchanged
+    re-run after it is a no-op of zero Spark jobs."""
     from messdb_spark.queries.linkage import dedup_substrings_incremental
 
     eng = Engine(spark, str(tmp_path / "wh"))
@@ -298,8 +300,12 @@ def test_incremental_state_rebuilds_on_min_len_change(spark, tmp_path):
     assert st1["mode"] == "build"
     st2 = dedup_substrings_incremental(eng, "d", "d_clean", min_len=35)
     assert st2["mode"] == "build"            # rebuilt, not reused
-    st3 = dedup_substrings_incremental(eng, "d", "d_clean", min_len=35)
+    with count_jobs() as jc:
+        st3 = dedup_substrings_incremental(eng, "d", "d_clean", min_len=35)
     assert st3["mode"] == "noop"
+    # catalog, state manifests and the one-row meta record are all
+    # read on the driver
+    assert jc.n == 0
 
 
 def test_incremental_commit_is_atomic(spark, tmp_path):
